@@ -117,8 +117,10 @@ def connected_components_blocked(
 ) -> DataFrame:
     """Exact connected components for a BLOCK-PARTITIONED edge set: every
     edge lies within one block and every node appears in exactly one
-    block (single-bucket LSH candidate graphs have this shape by
-    construction — pairs only ever join vectors of the same bucket).
+    block. Callers: ``corpus_semantic_dedup`` (single-bucket LSH — pairs
+    only ever join vectors of the same bucket) and
+    ``entity_link_clusters`` (pairs only join records of the same
+    nation, and each record has one nation).
 
     The disjoint-union structure turns the O(log n)-round iterative CC
     into ONE shuffle on the block key + a per-block union-find inside an

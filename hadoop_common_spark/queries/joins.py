@@ -523,7 +523,9 @@ def bloom_fpr_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
 # requires the SAME NATION (attribute blocking, the standard ER move):
 # without it the dense digit space chains transitively into one giant
 # cluster — blocking is what keeps clusters meaningful AND bounds the
-# closure's component sizes at scale.
+# closure's component sizes at scale. It also makes the pair graph a
+# disjoint union of per-nation subgraphs, so components are computed per
+# nation (blocked operator: no driver loop of checkpoint jobs).
 _LINK_CLUSTER_ORACLE = """
 WITH RECURSIVE pairs AS (
   SELECT c.c_custkey * 2 AS u, s.s_suppkey * 2 + 1 AS v
@@ -558,12 +560,17 @@ def entity_link_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     id (min node) with member counts per side. Scale: candidate pairs
     come from the lossless deletion-neighborhood blocking (linear in
     input + matches, no nested loop), and the transitive closure is the
-    pinned pointer-jumping BSP components operator — one neighbor-min
-    shuffle per round over (node, label), O(log n) rounds; the final
-    rollup aggregates one row per node. The oracle computes the same
-    fixpoint with a recursive CTE."""
+    nation-blocked components operator: pairs only join a customer and a
+    supplier of the same nation and each node has one nation, so every
+    edge and node lies in one block (the operator's precondition) and
+    the result equals the iterative operator's. One shuffle on the
+    nation key, then a union-find per nation in an Arrow kernel; a
+    nation's group is its verified lev<=1 edges, the same list the pair
+    step already produces, so it is bounded exactly as that list is.
+    The final rollup aggregates one row per node. The oracle computes
+    the same fixpoint with a recursive CTE."""
     from hadoop_common_spark.operators.dedup import deletion1_keys
-    from hadoop_common_spark.operators.graph import connected_components
+    from hadoop_common_spark.operators.graph import connected_components_blocked
 
     c = spark.table("customer").select(
         (F.col("c_custkey") * 2).alias("u"),
@@ -579,12 +586,12 @@ def entity_link_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     pairs = (
         c.join(s, ["_k", "_nk"])
-        .select("u", "v", "_ca", "_cb")
+        .select("u", "v", "_nk", "_ca", "_cb")
         .distinct()
         .filter(F.levenshtein("_ca", "_cb") <= 1)
-        .select("u", "v")
+        .select("u", "v", "_nk")
     )
-    comp = connected_components(pairs, "u", "v")
+    comp = connected_components_blocked(pairs, "u", "v", "_nk")
     return comp.groupBy(F.col("component").alias("cluster_id")).agg(
         F.count(F.lit(1)).cast("bigint").alias("n_members"),
         F.sum((F.col("node") % 2 == 0).cast("int")).cast("bigint").alias("n_customers"),

@@ -138,6 +138,16 @@ def get_spark(app_name: str = "hadoop_common_spark", shuffle_partitions: int | N
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
+        # DataFrame call-site capture off: with it on, every F.* / Column
+        # call is wrapped to record its Python call site, which costs ~5
+        # py4j round trips per call (active session, conf read, origin
+        # lookup, set, clear) and re-tries a failing `import ipykernel`
+        # each time (Python does not cache a failed import) — thousands
+        # of calls in a wide query build. Only the Python line in
+        # DataFrame error contexts is lost; errors still raise. Builder
+        # time, not _RUNTIME_CONFS: PySpark reads the flag once per
+        # process and caches it.
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
         # Long sessions (the 195-query strict sweep, the ~130-plan bench)
         # fill the JVM's default 240 MB code cache with whole-stage-codegen
         # classes; once full, HotSpot disables the JIT and late queries run

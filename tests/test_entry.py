@@ -4,6 +4,8 @@ from __future__ import annotations
 
 import os
 
+import pytest
+
 import __spark_entry__ as entrymod
 
 
@@ -88,3 +90,28 @@ def test_register_views_memoized_and_force(spark, tmp_path):
     # not see this test's truncated tmp copy
     register_views(spark, "/root/testdata/sf0.001", force=True)
     assert spark.table("region").count() == 5
+
+
+def test_dataframe_debugging_off_errors_still_raise(spark):
+    """get_spark turns DataFrame call-site capture off (it costs py4j
+    round trips on every F.* / Column call). Only the Python call site
+    in error contexts goes away: an ANSI runtime error still raises
+    with its error condition."""
+    from pyspark.errors import ArithmeticException
+    from pyspark.errors.utils import is_debugging_enabled
+    from pyspark.sql import functions as F
+
+    assert spark.conf.get("spark.python.sql.dataFrameDebugging.enabled") == "false"
+    assert is_debugging_enabled() is False
+
+    prev = spark.conf.get("spark.sql.ansi.enabled")
+    spark.conf.set("spark.sql.ansi.enabled", "true")
+    try:
+        df = spark.range(1).select(
+            (F.col("id") + 1).cast("int").alias("a"), F.col("id").cast("int").alias("b")
+        )
+        with pytest.raises(ArithmeticException) as err:
+            df.select((F.col("a") / F.col("b")).alias("q")).collect()
+    finally:
+        spark.conf.set("spark.sql.ansi.enabled", prev)
+    assert err.value.getCondition() == "DIVIDE_BY_ZERO"

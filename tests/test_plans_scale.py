@@ -632,3 +632,26 @@ def test_close_pairs_binned_no_nested_loop(spark, sf_dir, registry):
     assert "BroadcastNestedLoopJoin" not in plan
     assert "CartesianProduct" not in plan
     assert "_bin" in plan  # the range rides the bin equi-key
+
+
+def test_entity_link_clusters_build_runs_no_jobs(spark, sf_dir, registry):
+    """entity_link_clusters' components step is the nation-blocked
+    operator: building the query starts no Spark job (the iterative
+    operator runs eager localCheckpoint jobs every round), and the plan
+    carries the per-nation union-find kernel, not the RDD scan a
+    checkpointed frame leaves behind."""
+    from hadoop_common_spark.tables import register_views
+
+    register_views(spark, sf_dir)  # view set-up is not part of the build
+    sc = spark.sparkContext
+    group = "test-entity-link-clusters-build"
+    sc.setJobGroup(group, "entity_link_clusters build")
+    try:
+        df = registry["entity_link_clusters"].fn(spark, sf_dir)
+        plan = plan_of(df)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+    assert "FlatMapGroupsInPandas" in plan
+    assert "Scan ExistingRDD" not in plan

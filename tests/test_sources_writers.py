@@ -437,12 +437,16 @@ def test_small_files_bin_packed_into_few_partitions(spark, tmp_path):
 def test_parquet_write_commits_atomically(spark, tmp_path):
     """FileOutputCommitter parity (SURVEY §2.2 row 25, 'inherited'):
     a completed write leaves the _SUCCESS marker and no _temporary
-    residue — the visible contract of the v1/v2 commit protocols."""
-    import os
+    residue — the visible contract of the v1/v2 commit protocols.
+    Written through writers.write_parquet, whose codec names the part
+    files."""
+    from hadoop_common_spark.sources.writers import write_parquet
 
     out = tmp_path / "committed"
-    spark.range(100).write.mode("overwrite").parquet(str(out))
+    write_parquet(spark.range(100), str(out), compression="zstd")
     names = os.listdir(out)
     assert "_SUCCESS" in names
     assert not any(n.startswith("_temporary") for n in names)
+    parts = [n for n in names if n.startswith("part-")]
+    assert parts and all(n.endswith(".zstd.parquet") for n in parts)
     assert spark.read.parquet(str(out)).count() == 100
