@@ -123,14 +123,6 @@ def word_shingles(text_col: str, n: int = 3) -> Column:
     return F.array_distinct(zipped)
 
 
-def word_shingles_sql(text_expr: str, n: int = 3) -> str:
-    parts = " || ' ' || ".join(f"t[i+{k}]" for k in range(n))
-    return (
-        f"list_distinct(list_transform(generate_series(1, len(t)-{n-1}), i -> {parts}))"
-        f" /* t := string_split_regex({text_expr}) */"
-    )
-
-
 def minhash_signature(
     df: DataFrame, id_col: str, text_col: str, num_hashes: int = 16, shingle_n: int = 3
 ) -> DataFrame:

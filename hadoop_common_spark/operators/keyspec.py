@@ -105,11 +105,3 @@ def keyspec_sort(df: DataFrame, line_col: str, specs: list[str], sep: str = "\t"
     (lib/partition/TotalOrderPartitioner.java:102, InputSampler.java:314).
     """
     return df.orderBy(*keyspec_sort_columns(specs, line_col, sep))
-
-
-def keyfield_partition(df: DataFrame, line_col: str, num_partitions: int, fields_: list[int], sep: str = "\t") -> DataFrame:
-    """KeyFieldBasedPartitioner (getPartition :85-119): shuffle on a subset
-    of key fields so equal subkeys co-locate (secondary-sort setup)."""
-    arr = F.split(F.col(line_col), re.escape(sep))
-    part_cols = [F.try_element_at(arr, F.lit(i)) for i in fields_]
-    return df.repartition(num_partitions, *part_cols)

@@ -61,33 +61,6 @@ def tumbling_hourly_stream(events: DataFrame, watermark: str = "2 hours") -> Dat
     )
 
 
-def sliding_stream(events: DataFrame, watermark: str = "1 hour") -> DataFrame:
-    """Streaming twin of window_sliding_10m_5m."""
-    return (
-        events.withWatermark("ts", watermark)
-        .groupBy(F.window("ts", "10 minutes", "5 minutes"))
-        .agg(F.count(F.lit(1)).alias("n_events"))
-        .select(
-            F.unix_timestamp(F.col("window.start")).alias("window_start"), "n_events"
-        )
-    )
-
-
-def session_stream(events: DataFrame, gap: str = "30 minutes", watermark: str = "2 hours") -> DataFrame:
-    """Streaming sessionization via session_window (batch twin:
-    window_sessionize's gap/lag formulation)."""
-    return (
-        events.withWatermark("ts", watermark)
-        .groupBy(F.session_window("ts", gap), F.col("user_id"))
-        .agg(F.count(F.lit(1)).alias("n_events"))
-        .select(
-            "user_id",
-            F.unix_timestamp(F.col("session_window.start")).alias("session_start"),
-            "n_events",
-        )
-    )
-
-
 def dedup_stream(events: DataFrame, watermark: str = "1 hour") -> DataFrame:
     """Streaming exact dedup within the watermark horizon
     (dropDuplicatesWithinWatermark — the streaming twin of dedup_exact)."""

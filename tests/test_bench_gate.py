@@ -1,22 +1,27 @@
-"""Unit pins for the bench regression gate and the CPU yardstick
-aggregation (pure functions in bench.py — no Spark session needed).
+"""Unit pins for the bench regression gate and the stdout contract
+(pure functions in bench.py), plus one Spark check that the plan
+fingerprint is stable across builds and moves with the plan.
 
 The gate is measurement infrastructure, but it is DRIVER-FACING: its
-flags land verbatim in the archived BENCH_r{N}.json, and three rounds
-of false flags (r8-r10) cost a manual BENCH_NOTES adjudication each.
-These pins hold the two-component semantics (VERDICT r10 #1) the fix
-established: a query flags only when it regressed under BOTH the
-write yardstick AND the CPU yardstick, and every flag names which
-component(s) fired so a degraded single-yardstick round is visible in
-the artifact itself. Reference anchor: the SortValidator discipline
+flags land verbatim in the archived BENCH_r{N}.json. It flags a row when
+its physical-plan fingerprint differs from the previous archive's
+("plan"), when its raw wall time is above 1.5x the archived one
+("time"), or both — a number the host cannot move next to one it can.
+Reference anchor: the SortValidator discipline
 (JCT/mapred/SortValidator.java:54) — validate the measurement, not
-just the output."""
+just the output.
+
+Runtime on 4 cores: 16 s for the file, nearly all of it the Spark
+session and the four flagship plans of the fingerprint test; the pure
+tests take about one second."""
 
 from __future__ import annotations
 
 import importlib.util
+import json
 import os
 import sys
+from types import SimpleNamespace
 
 import pytest
 
@@ -32,151 +37,179 @@ def bench():
     return mod
 
 
-def test_gate_requires_both_components(bench):
-    """The r10 phantom-flag class: the write yardstick says the host got
-    2x faster (slow_write=0.5 would normalize a flat CPU-bound query to
-    2x 'slower'); with the CPU yardstick flat, the max() denominator
-    keeps the query unflagged."""
-    cur, prev = {"q": 1.0}, {"q": 1.0}
-    host = max(0.5, 1.0)  # max of the two available slowdowns
-    out = bench._regressions(cur, prev, host, slow_write=0.5, slow_cpu=1.0)
-    assert out == {}
+# Two builds of the same query in one session differ only in these
+# counters: expression ids (with and without the L suffix), exchange
+# plan ids, and the lambda-variable suffix of higher-order functions.
+_BUILD_1 = """AdaptiveSparkPlan isFinalPlan=false
++- HashAggregate(keys=[n_name#12], functions=[sum(rev#40L)], output=[n_name#12, revenue#41L])
+   +- Exchange hashpartitioning(n_name#12, 8), ENSURE_REQUIREMENTS, [plan_id=118]
+      +- Project [transform(toks#7, lambdafunction(upper(lambda x_22#90), lambda x_22#90, false)) AS up#91]
+         +- BroadcastHashJoin [o_custkey#3L], [c_custkey#5L], Inner, BuildRight, false
+            :- Filter aggregate(v#8, 0, lambdafunction((lambda acc_3 + lambda y_4), lambda acc_3, lambda y_4, false))
+            +- BroadcastExchange HashedRelationBroadcastMode(List(input[0, bigint, false]),false), [plan_id=97]"""
+_BUILD_2 = """AdaptiveSparkPlan isFinalPlan=false
++- HashAggregate(keys=[n_name#212], functions=[sum(rev#240L)], output=[n_name#212, revenue#241L])
+   +- Exchange hashpartitioning(n_name#212, 8), ENSURE_REQUIREMENTS, [plan_id=1018]
+      +- Project [transform(toks#207, lambdafunction(upper(lambda x_57#290), lambda x_57#290, false)) AS up#291]
+         +- BroadcastHashJoin [o_custkey#203L], [c_custkey#205L], Inner, BuildRight, false
+            :- Filter aggregate(v#208, 0, lambdafunction((lambda acc_31 + lambda y_32), lambda acc_31, lambda y_32, false))
+            +- BroadcastExchange HashedRelationBroadcastMode(List(input[0, bigint, false]),false), [plan_id=997]"""
+
+
+def _fake_df(plan: str):
+    qe = SimpleNamespace(executedPlan=lambda: SimpleNamespace(toString=lambda: plan))
+    return SimpleNamespace(_jdf=SimpleNamespace(queryExecution=lambda: qe))
+
+
+def test_normalizer_equates_two_builds_of_one_plan(bench):
+    assert _BUILD_1 != _BUILD_2
+    assert bench.normalize_plan(_BUILD_1) == bench.normalize_plan(_BUILD_2)
+    assert bench.plan_fingerprint(_fake_df(_BUILD_1)) == bench.plan_fingerprint(_fake_df(_BUILD_2))
+    norm = bench.normalize_plan(_BUILD_1)
+    assert "#" not in norm and "plan_id=]" in norm
+    assert "lambda x," in norm and "lambda acc +" in norm and "x_22" not in norm
+
+
+def test_normalizer_keeps_an_operator_change_visible(bench):
+    smj = _BUILD_2.replace("BroadcastHashJoin", "SortMergeJoin")
+    assert bench.plan_fingerprint(_fake_df(_BUILD_1)) != bench.plan_fingerprint(_fake_df(smj))
+    # a changed literal inside a lambda still differs: only the counter
+    # suffix is stripped, not the body
+    changed = _BUILD_1.replace("upper(lambda x_22#90)", "lower(lambda x_22#90)")
+    assert bench.normalize_plan(changed) != bench.normalize_plan(_BUILD_1)
+
+
+def test_gate_single_component_flags_are_labeled(bench):
+    """A plan change at an unchanged time fires "plan"; a slower row with
+    the same plan fires "time" — which says on its face that the plan
+    did not move."""
+    out = bench._regressions({"q": 1.0}, {"q": 1.0}, {"q": "new"}, {"q": "old"}, "BENCH_DETAIL_r13.json")
+    assert out["q"] == {
+        "prev": 1.0, "now": 1.0, "norm": 1.0, "fired": "plan", "base": "BENCH_DETAIL_r13.json",
+    }
+    out = bench._regressions({"q": 2.0}, {"q": 1.0}, {"q": "same"}, {"q": "same"}, "r13")
+    assert out["q"]["fired"] == "time" and out["q"]["norm"] == 2.0
 
 
 def test_gate_fires_when_both_regress_and_names_components(bench):
-    cur, prev = {"q": 2.0}, {"q": 1.0}
-    out = bench._regressions(cur, prev, 1.0, slow_write=1.0, slow_cpu=1.0)
-    rec = out["q"]
-    assert rec["fired"] == "write+cpu"
-    assert rec["ratio"] == 2.0
-    assert rec["ratio_norm_write"] == 2.0 and rec["ratio_norm_cpu"] == 2.0
+    out = bench._regressions({"q": 2.0}, {"q": 1.0}, {"q": "new"}, {"q": "old"}, "r13")
+    assert out["q"]["fired"] == "plan+time"
+    assert out["q"]["norm"] == 2.0
 
 
-def test_gate_degraded_single_yardstick_is_labeled(bench):
-    """A round where the CPU kernel tag changed (r10) or DFSIO failed
-    gates on one component only — the flag must say so."""
-    cur, prev = {"q": 2.0}, {"q": 1.0}
-    out = bench._regressions(cur, prev, 1.0, slow_write=1.0, slow_cpu=None)
-    assert out["q"]["fired"] == "write"
-    out = bench._regressions(cur, prev, 1.0, slow_write=None, slow_cpu=1.0)
-    assert out["q"]["fired"] == "cpu"
-    out = bench._regressions(cur, prev, 1.0)
-    assert out["q"]["fired"] == "combined"
+def test_gate_fingerprints_are_keyed_by_tier_prefix(bench):
+    fps, prev_fps = {"scale/q": "new", "q": "same"}, {"scale/q": "old", "q": "same"}
+    assert bench._regressions({"q": 1.0}, {"q": 1.0}, fps, prev_fps, "r13") == {}
+    out = bench._regressions({"q": 1.0}, {"q": 1.0}, fps, prev_fps, "r13", "scale/")
+    assert out["q"]["fired"] == "plan"
 
 
 def test_gate_skips_missing_and_errored_baselines(bench):
     """No baseline, zero baseline, or an errored (-1) current timing
-    must never flag — the no-baseline newcomers go through the
-    self-referential outlier retime instead."""
+    never flags, even when the plan changed; a fingerprint missing on
+    either side (an archive from before fingerprints) is no plan flag."""
+    fps = {"new_q": "a", "err_q": "a", "zero_prev": "a", "no_prev_fp": "a"}
+    prev_fps = {"new_q": "b", "err_q": "b", "zero_prev": "b"}
     out = bench._regressions(
-        {"new_q": 50.0, "err_q": -1.0, "zero_prev": 1.0},
-        {"err_q": 1.0, "zero_prev": 0.0},
-        1.0,
+        {"new_q": 50.0, "err_q": -1.0, "zero_prev": 1.0, "no_prev_fp": 1.0},
+        {"err_q": 1.0, "zero_prev": 0.0, "no_prev_fp": 1.0},
+        fps, prev_fps, "r13",
     )
     assert out == {}
 
 
-def test_gate_boundary_is_strictly_above_1_3(bench):
-    out = bench._regressions({"q": 1.3}, {"q": 1.0}, 1.0)
-    assert out == {}
-    out = bench._regressions({"q": 1.31}, {"q": 1.0}, 1.0)
-    assert "q" in out
-
-
-def test_banded_base_is_the_more_lenient_of_prev_and_median(bench):
-    """VERDICT r11 #2: the r10→r11 false-flag class — r10 was a query's
-    all-time-best round, so gating r11 on it alone flagged a
-    reversion-to-band. The banded base is the LARGER of (prev, band
-    median): a flag must mean slower than the whole recorded band, not
-    just slower than the band's single fastest member."""
-    hist = [
-        ("BENCH_DETAIL_r11.json", {"q": 0.669, "slow": 3.0}),  # best-ever round
-        ("BENCH_DETAIL_r10.json", {"q": 1.27, "slow": 1.0}),
-        ("BENCH_DETAIL_r09.json", {"q": 1.32, "slow": 1.0}),
-    ]
-    prev = hist[0][1]
-    base, notes = bench._banded(prev, hist)
-    # best-ever prev (0.669) defers to the band median (1.27)
-    assert base["q"] == 1.27 and "median" in notes["q"]
-    # a prev that itself regressed (3.0, flagged last round) stays the
-    # bar — staying at 3.0 is not a NEW regression, it was already
-    # reported when it happened
-    assert base["slow"] == 3.0 and "prev" in notes["slow"]
-
-
-def test_banded_reversion_to_band_does_not_flag(bench):
-    """The end-to-end shape of r11's three adjudicated flags AND the
-    first r12 run's two: current value inside its historical band,
-    prior round a freak best-ever. vs prev alone: 1.023/0.669 = 1.53
-    -> flag; vs the banded base (median 1.27) it dissolves — exactly
-    the judge's r11 hand-adjudication, now in the gate."""
-    hist = [
-        ("r11", {"q": 0.669}),  # freak best-ever
-        ("r10", {"q": 1.27}),
-        ("r09", {"q": 1.32}),
-    ]
-    base, notes = bench._banded(hist[0][1], hist)
-    assert base["q"] == 1.27
-    out = bench._regressions({"q": 1.023}, base, 1.0, 1.0, 1.0, base_notes=notes)
-    assert out == {}
-    # but a value slower than the WHOLE band still flags
-    out = bench._regressions({"q": 1.8}, base, 1.0, 1.0, 1.0, base_notes=notes)
-    assert out["q"]["base"].startswith("lenient(") and "median" in out["q"]["base"]
+def test_gate_boundary_is_strictly_above_1_5(bench):
+    assert bench._regressions({"q": 1.5}, {"q": 1.0}, {}, {}, "r13") == {}
+    assert "q" in bench._regressions({"q": 1.51}, {"q": 1.0}, {}, {}, "r13")
 
 
 def test_regression_record_names_comparison_base(bench):
-    base, notes = bench._banded(
-        {"q": 1.0}, [("r11", {"q": 1.0}), ("r10", {"q": 1.1})]
-    )
-    out = bench._regressions({"q": 2.0}, base, 1.0, 1.0, 1.0, base_notes=notes)
-    assert "base" in out["q"] and "prev" in out["q"]["base"]
-    # without notes the record still says what it compared against
-    out = bench._regressions({"q": 2.0}, {"q": 1.0}, 1.0, 1.0, 1.0)
-    assert out["q"]["base"] == "prev"
+    out = bench._regressions({"q": 2.0}, {"q": 1.0}, {}, {}, "BENCH_DETAIL_r13.json")
+    assert out["q"]["base"] == "BENCH_DETAIL_r13.json"
 
 
-def test_banded_query_missing_from_prev_uses_history_median(bench):
-    """A query that errored in the newest archive (-1 / absent) but has
-    older rounds keeps a gate base instead of silently losing it."""
-    hist = [("r11", {}), ("r10", {"q": 2.0}), ("r09", {"q": 1.0})]
-    base, notes = bench._banded(hist[0][1], hist)
-    assert base["q"] == 1.5 and "no prev entry" in notes["q"]
-
-
-def test_recent_round_baselines_orders_and_caps(bench, tmp_path, monkeypatch):
-    import json as _json
-
-    for n, qv in ((8, 4.0), (9, 3.0), (10, 2.0), (11, 1.0)):
-        (tmp_path / f"BENCH_DETAIL_r{n:02d}.json").write_text(
-            _json.dumps({"sf": 0.1, "queries": {"q": qv}})
-        )
+def test_prev_round_baseline_is_newest_archive_before_current_round(bench, tmp_path, monkeypatch):
+    for n in (10, 11):
         (tmp_path / f"BENCH_r{n:02d}.json").write_text("{}")
+    for n, sf in ((10, 0.1), (11, 0.1), (12, 0.1), (9, 0.01)):
+        (tmp_path / f"BENCH_DETAIL_r{n:02d}.json").write_text(
+            json.dumps({"sf": sf, "queries": {"q": float(n)}})
+        )
     monkeypatch.setattr(bench, "REPO_DIR", str(tmp_path))
-    hist = bench._recent_round_baselines(0.1, k=3)
-    assert [lbl for lbl, *_ in hist] == [
-        "BENCH_DETAIL_r11.json",
-        "BENCH_DETAIL_r10.json",
-        "BENCH_DETAIL_r09.json",
-    ]
-    assert hist[0][1] == {"q": 1.0}
+    assert bench._current_round() == 12
+    label, prev = bench._prev_round_baseline(0.1)
+    assert label == "BENCH_DETAIL_r11.json" and prev["queries"] == {"q": 11.0}
+    assert bench._prev_round_baseline(0.01)[0] == "BENCH_DETAIL_r09.json"
+    assert bench._prev_round_baseline(1.0) == (None, {})
 
 
-def test_cpu_aggregate_even_count_uses_midpoint(bench):
-    """ADVICE r10: the typical snapshot count is EVEN (initial + 3
-    tier-end + final); sorted[n//2] latched the upper-middle value —
-    a systematic slow bias on the yardstick. statistics.median takes
-    the midpoint."""
-    snaps = [
-        {"cpu_mrows_s": 100.0, "cpu_reps": [1.0]},
-        {"cpu_mrows_s": 140.0, "cpu_reps": [1.0]},
-        {"cpu_mrows_s": 120.0, "cpu_reps": [1.0]},
-        {"cpu_mrows_s": 160.0, "cpu_reps": [1.0]},
-    ]
-    agg = bench.cpu_aggregate(snaps)
-    assert agg["cpu_mrows_s"] == 130.0  # (120+140)/2, not 140
-    assert agg["cpu_snapshots"] == [100.0, 140.0, 120.0, 160.0]
-    assert agg["cpu_rel_spread"] == 0.6
-    assert bench.cpu_aggregate([]) == {}
+# The stdout line's top-level keys and the BENCH_DETAIL keys before the
+# plan gate, frozen: whatever reads the bench parses both.
+_LINE_KEYS = {
+    "metric", "value", "unit", "sf", "n_queries", "n_errors", "scale_total",
+    "scale_replicas", "n_scale", "scale100_total", "n_scale100", "tpch_total",
+    "n_tpch", "dfsio", "cpu", "n_cpu_snapshots", "norm_headline", "norm_scale",
+    "norm_headline_cpu", "vs_round", "host_slowdown", "regressions", "queries",
+    "cpus",
+}
+_DETAIL_KEYS = {
+    "cpu", "dfsio", "metric", "norm_headline_x_cpu_mrows_s",
+    "norm_headline_x_write_mb_s", "norm_scale_x_cpu_mrows_s",
+    "norm_scale_x_write_mb_s", "queries", "scale100_queries",
+    "scale100_replicas", "scale100_total", "scale_queries", "scale_replicas",
+    "scale_total", "sf", "skew_queries", "tpch_queries", "tpch_replicas",
+    "tpch_total", "unit", "value", "vs_prev",
+}
+_VS_PREV_KEYS = {
+    "prev_round", "band_rounds", "host_slowdown", "host_slowdown_write",
+    "host_slowdown_cpu", "regressions", "scale_regressions",
+    "scale100_regressions", "tpch_regressions", "skew_regressions", "skew_ratios",
+}
+
+
+def _synthetic_run(bench, slow: float):
+    """Every tier timed (10-99 s per row, so inline timings are long),
+    and a previous archive ``slow`` times faster with other plans."""
+    timings = {
+        t.prefix: {q: 10.0 + (i % 90) + 0.123 for i, q in enumerate(t.queries)}
+        for t in bench.TIERS
+    }
+    skew = {"join_plain": 8.2, "join_salted": 3.9}
+    fps = {t.prefix + q: "f" * 16 for t in bench.TIERS for q in t.queries}
+    prev = {
+        t.key("queries"): {q: v / slow for q, v in timings[t.prefix].items()}
+        for t in bench.TIERS
+    }
+    prev.update(
+        sf=0.1, skew_queries={k: v / slow for k, v in skew.items()},
+        dfsio={"write_mb_s": 150.0}, fingerprints={k: "0" * 16 for k in fps},
+    )
+    return bench.build_detail(
+        0.1, timings, skew, {"write_mb_s": 120.0, "read_mb_s": 900.0},
+        fps, "BENCH_DETAIL_r13.json", prev,
+    )
+
+
+@pytest.mark.parametrize("cpus,bounded", [(4, True), (32, False)])
+def test_stdout_line_contract(bench, cpus, bounded):
+    detail = _synthetic_run(bench, slow=2.0)
+    assert set(detail) == _DETAIL_KEYS | {"fingerprints"}
+    assert set(detail["vs_prev"]) == _VS_PREV_KEYS
+    assert detail["vs_prev"]["host_slowdown"] == 1.25
+    line = bench.stdout_line(detail, cpus, bounded)
+    assert len(line) <= 2000
+    parsed = json.loads(line)
+    assert set(parsed) == _LINE_KEYS | ({"bounded"} if bounded else set())
+    assert parsed["cpus"] == cpus
+    inline = [k for k in parsed["queries"] if k != "detail"]
+    assert inline and inline == [
+        p + n for p, n in bench.INLINE_QUERIES[: len(inline)]
+    ], "inline timings follow the committed INLINE_QUERIES order"
+    if bounded:
+        assert parsed["regressions"] == {}
+    else:
+        assert len(parsed["regressions"]) == 8
+        assert {v["fired"] for v in parsed["regressions"].values()} == {"plan+time"}
 
 
 def test_inline_queries_name_real_bench_rows(bench):
@@ -184,13 +217,28 @@ def test_inline_queries_name_real_bench_rows(bench):
     times — a typo'd or stale name silently shrinks the per-query map
     the driver's PERF comparison and the reduced-core scaling sweep
     parse from the stdout line (VERDICT r12 #2/#5)."""
-    tiers = {
-        "": set(bench.HEADLINE) | {"terasort_equivalent"},
-        "scale/": set(bench.SCALE_QUERIES),
-        "scale100/": set(bench.SCALE100_QUERIES),
-        "tpch/": set(bench.TPCH_SCALE_QUERIES),
-    }
+    tiers = {t.prefix: set(t.queries) for t in bench.TIERS}
+    assert set(tiers) == {"", "scale/", "scale100/", "tpch/"}
     bad = [(p, n) for p, n in bench.INLINE_QUERIES if n not in tiers[p]]
     assert not bad, f"INLINE_QUERIES entries not in their tier: {bad}"
     # deterministic across runs/core counts: no duplicates
     assert len(set(bench.INLINE_QUERIES)) == len(bench.INLINE_QUERIES)
+
+
+def test_fingerprint_is_stable_across_builds_and_moves_with_the_plan(bench, spark, sf_dir):
+    """Two builds of the flagship in one session hash the same; with
+    broadcast joins disabled its dims go sort-merge and the hash moves."""
+    from hadoop_common_spark.queries import load_all
+
+    fn = load_all()["flagship_revenue_by_nation"].fn
+    first = bench.plan_fingerprint(fn(spark, sf_dir))
+    assert bench.plan_fingerprint(fn(spark, sf_dir)) == first
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "-1")
+    try:
+        no_broadcast = bench.plan_fingerprint(fn(spark, sf_dir))
+    finally:
+        spark.conf.set(key, old)
+    assert no_broadcast != first
+    assert bench.plan_fingerprint(fn(spark, sf_dir)) == first
