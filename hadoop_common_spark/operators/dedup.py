@@ -22,8 +22,10 @@ from __future__ import annotations
 
 import hashlib
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
+
+from hadoop_common_spark.operators.skew import capped_self_join_pairs
 
 HEX15 = 15  # 60-bit hashes: fit in signed int64 in both Spark and DuckDB
 
@@ -286,27 +288,14 @@ def minhash_lsh_pairs(
             .select("id_a", "id_b")
         )
     else:
-        bk = lsh_band_keys(sig, id_col, bands, rows)
-        # occupancy guard (skew.capped_self_join_pairs rationale): a
-        # degenerate band bucket fans out occ²/2 pairs; capped buckets
-        # drop out of candidate generation, their members still pair
-        # through other bands. First-match dedup is NOT valid here (a
-        # capped bucket can be the lowest agreeing band), so the
-        # distinct stays.
-        ok = (
-            bk.groupBy("band", "band_key")
-            .agg(F.count(F.lit(1)).alias("_occ"))
-            .filter(F.col("_occ") <= max_bucket_size)
-            .select("band", "band_key")
-        )
-        bk = bk.join(ok, ["band", "band_key"])
-        a = bk.select(F.col(id_col).alias("id_a"), "band", "band_key")
-        b = bk.select(F.col(id_col).alias("id_b"), "band", "band_key")
-        cand = (
-            a.join(b, ["band", "band_key"])
-            .filter(F.col("id_a") < F.col("id_b"))
-            .select("id_a", "id_b")
-            .distinct()
+        # occupancy guard (skew.capped_self_join_pairs rationale).
+        # First-match dedup is NOT valid here (a capped bucket can be the
+        # lowest agreeing band), so the capped join keeps its distinct.
+        cand = capped_self_join_pairs(
+            lsh_band_keys(sig, id_col, bands, rows),
+            ["band", "band_key"],
+            id_col,
+            max_bucket_size,
         )
     sa = sig.select(F.col(id_col).alias("id_a"), F.col("_shset").alias("sh_a"))
     sb = sig.select(F.col(id_col).alias("id_b"), F.col("_shset").alias("sh_b"))
@@ -495,6 +484,88 @@ def simhash_pairs(
     )
 
 
+def _shingle_overlap(
+    df: DataFrame,
+    id_col: str,
+    text_col: str,
+    block_col: str,
+    shingle_n: int,
+    max_shingle_df: int | None,
+) -> DataFrame:
+    """The sparse (block, shingle) similarity join behind
+    :func:`ngram_jaccard_pairs` and :func:`containment_pairs`:
+    ``(id_a, id_b, _inter, _na, _nb)`` for every same-block pair
+    (id_a < id_b) sharing at least one shingle, where ``_inter`` is the
+    size of the shared distinct-shingle set and ``_na``/``_nb`` the two
+    set sizes. With ``max_shingle_df`` the candidates come from cold
+    shingles only and ``_inter`` is an exact ``array_intersect`` over the
+    FULL sets; without it ``_inter`` is the count of joined shingles."""
+    # Doc-level shingle arrays materialized ONCE (localCheckpoint): the
+    # shingling pass would otherwise run 3× (two join sides + the sizes
+    # branch), and set sizes become a zero-shuffle F.size map instead of
+    # a groupBy over exploded rows. On a cluster this is the temp sketch
+    # table you'd write to storage between the two stages.
+    docsh = df.select(
+        F.col(block_col).alias("_blk"),
+        F.col(id_col),
+        word_shingles(text_col, shingle_n).alias("_shs"),
+    ).localCheckpoint(eager=False)
+    sh = docsh.select("_blk", id_col, F.explode("_shs").alias("_sh"))
+    if max_shingle_df is not None:
+        # Per-shingle df as a WINDOW count, not a groupBy + join-back:
+        # the join form re-shuffles the exploded shingle table per join
+        # side AND leaves the corpus-sized "cold" relation to the
+        # broadcast planner (AQE broadcasting it blew
+        # spark.driver.maxResultSize at the 100x replica tier). The
+        # window shuffles shingles ONCE on (blk, shingle) — exactly the
+        # partitioning the a/b self-join consumes — and sh has one row
+        # per (doc, distinct shingle), so a plain count IS the df.
+        sh = (
+            sh.withColumn(
+                "_df", F.count(F.lit(1)).over(Window.partitionBy("_blk", "_sh"))
+            )
+            .filter(F.col("_df") <= max_shingle_df)
+            .drop("_df")
+        )
+    a = sh.select(F.col("_blk"), F.col(id_col).alias("id_a"), "_sh")
+    b = sh.select(F.col("_blk"), F.col(id_col).alias("id_b"), "_sh")
+    # merge hint (r13): the exploded (block, shingle) table is
+    # corpus-sized, but the planner sizes it from the checkpointed
+    # doc-level sketch and BROADCASTS one whole side (plan evidence
+    # plans/r12: BroadcastHashJoin over both shingle sides). The SMJ is
+    # the only shape that exists at 100 TB and measured at-or-better at
+    # every bench tier (see OPTIMIZATION_r13.md, sparse-join family).
+    shared = a.join(b.hint("merge"), ["_blk", "_sh"]).filter(
+        F.col("id_a") < F.col("id_b")
+    )
+    if max_shingle_df is not None:
+        # exact verify over the full sets: capped discovery, uncapped score
+        xa = docsh.select(F.col(id_col).alias("id_a"), F.col("_shs").alias("_sa"))
+        xb = docsh.select(F.col(id_col).alias("id_b"), F.col("_shs").alias("_sb"))
+        return (
+            shared.select("id_a", "id_b")
+            .distinct()
+            .join(xa, "id_a")
+            .join(xb, "id_b")
+            .select(
+                "id_a",
+                "id_b",
+                F.size(F.array_intersect("_sa", "_sb")).alias("_inter"),
+                F.size("_sa").alias("_na"),
+                F.size("_sb").alias("_nb"),
+            )
+        )
+    sizes = docsh.select(F.col(id_col), F.size("_shs").alias("_n"))
+    sa = sizes.select(F.col(id_col).alias("id_a"), F.col("_n").alias("_na"))
+    sb = sizes.select(F.col(id_col).alias("id_b"), F.col("_n").alias("_nb"))
+    return (
+        shared.groupBy("id_a", "id_b")
+        .agg(F.count(F.lit(1)).alias("_inter"))
+        .join(sa, "id_a")
+        .join(sb, "id_b")
+    )
+
+
 def ngram_jaccard_pairs(
     df: DataFrame,
     id_col: str,
@@ -526,85 +597,11 @@ def ngram_jaccard_pairs(
     (high union, hot-only overlap — far below any practical threshold).
     Join fan-out becomes bounded by max_shingle_df²/2 per gram
     regardless of corpus size. None (default) = exact single-pass form."""
-    # Doc-level shingle arrays materialized ONCE (localCheckpoint): the
-    # shingling pass would otherwise run 3× (two join sides + the sizes
-    # branch), and set sizes become a zero-shuffle F.size map instead of
-    # a groupBy over exploded rows. On a cluster this is the temp sketch
-    # table you'd write to storage between the two stages.
-    docsh = df.select(
-        F.col(block_col).alias("_blk"),
-        F.col(id_col),
-        word_shingles(text_col, shingle_n).alias("_shs"),
-    ).localCheckpoint(eager=False)
-    sh = docsh.select("_blk", id_col, F.explode("_shs").alias("_sh"))
-
-    if max_shingle_df is not None:
-        # candidate discovery over COLD shingles only (one extra agg on
-        # the exploded frame — map-side combined, same shuffle key)
-        # Per-shingle df as a WINDOW count, not a groupBy + join-back:
-        # the join form re-shuffles the exploded shingle table per join
-        # side AND leaves the corpus-sized "cold" relation to the
-        # broadcast planner (AQE broadcasting it blew
-        # spark.driver.maxResultSize at the 100x replica tier). The
-        # window shuffles shingles ONCE on (blk, shingle) — exactly the
-        # partitioning the a/b self-join consumes — and sh has one row
-        # per (doc, distinct shingle), so a plain count IS the df.
-        from pyspark.sql import Window as _W
-
-        sh_cold = (
-            sh.withColumn(
-                "_df", F.count(F.lit(1)).over(_W.partitionBy("_blk", "_sh"))
-            )
-            .filter(F.col("_df") <= max_shingle_df)
-            .drop("_df")
-        )
-        a = sh_cold.select(F.col("_blk"), F.col(id_col).alias("id_a"), "_sh")
-        b = sh_cold.select(F.col("_blk"), F.col(id_col).alias("id_b"), "_sh")
-        # merge hint (r13): see the uncapped site below — same
-        # corpus-sized exploded build side, same estimator blind spot
-        cand = (
-            a.join(b.hint("merge"), ["_blk", "_sh"])
-            .filter(F.col("id_a") < F.col("id_b"))
-            .select("id_a", "id_b")
-            .distinct()
-        )
-        # exact verify over the full sets: capped discovery, uncapped score
-        xa = docsh.select(F.col(id_col).alias("id_a"), F.col("_shs").alias("_sa"))
-        xb = docsh.select(F.col(id_col).alias("id_b"), F.col("_shs").alias("_sb"))
-        inter_sz = F.size(F.array_intersect("_sa", "_sb")).cast("double")
-        union_sz = (F.size("_sa") + F.size("_sb")).cast("double") - inter_sz
-        return (
-            cand.join(xa, "id_a")
-            .join(xb, "id_b")
-            .withColumn("jaccard", inter_sz / union_sz)
-            .filter(F.col("jaccard") >= threshold)
-            .select("id_a", "id_b", "jaccard")
-        )
-
-    sizes = docsh.select(F.col(id_col), F.size("_shs").alias("_n"))
-    a = sh.select(F.col("_blk"), F.col(id_col).alias("id_a"), "_sh")
-    b = sh.select(F.col("_blk"), F.col(id_col).alias("id_b"), "_sh")
-    # merge hint (r13): the exploded (block, shingle) table is
-    # corpus-sized, but the planner sizes it from the checkpointed
-    # doc-level sketch and BROADCASTS one whole side (plan evidence
-    # plans/r12: BroadcastHashJoin over both shingle sides). The SMJ is
-    # the only shape that exists at 100 TB and measured at-or-better at
-    # every bench tier (see OPTIMIZATION_r13.md, sparse-join family).
-    inter = (
-        a.join(b.hint("merge"), ["_blk", "_sh"])
-        .filter(F.col("id_a") < F.col("id_b"))
-        .groupBy("id_a", "id_b")
-        .agg(F.count(F.lit(1)).alias("_inter"))
-    )
-    sa = sizes.select(F.col(id_col).alias("id_a"), F.col("_n").alias("_na"))
-    sb = sizes.select(F.col(id_col).alias("id_b"), F.col("_n").alias("_nb"))
-    jac = F.col("_inter").cast("double") / (
-        (F.col("_na") + F.col("_nb")).cast("double") - F.col("_inter").cast("double")
-    )
+    ov = _shingle_overlap(df, id_col, text_col, block_col, shingle_n, max_shingle_df)
+    inter = F.col("_inter").cast("double")
+    jac = inter / ((F.col("_na") + F.col("_nb")).cast("double") - inter)
     return (
-        inter.join(sa, "id_a")
-        .join(sb, "id_b")
-        .withColumn("jaccard", jac)
+        ov.withColumn("jaccard", jac)
         .filter(F.col("jaccard") >= threshold)
         .select("id_a", "id_b", "jaccard")
     )
@@ -639,82 +636,14 @@ def containment_pairs(
     re-verified with exact full-set intersections, so every emitted
     containment is exact — only pairs whose shared shingles are ALL hot
     are lost. None (default) keeps the exact single-pass oracle
-    semantics. Zero-shingle docs can never reach the threshold and are
-    excluded on BOTH engines.
+    semantics. Zero-shingle docs never pair: they share no shingle with
+    any doc (the oracle excludes them explicitly).
     """
-    docsh = (
-        df.select(
-            F.col(block_col).alias("_blk"),
-            F.col(id_col),
-            word_shingles(text_col, shingle_n).alias("_shs"),
-        )
-        .filter(F.size("_shs") > 0)
-        .localCheckpoint(eager=False)
-    )
-    sh = docsh.select("_blk", id_col, F.explode("_shs").alias("_sh"))
-
-    if max_shingle_df is not None:
-        # Per-shingle df as a WINDOW count, not a groupBy + join-back:
-        # the join form re-shuffles the exploded shingle table per join
-        # side AND leaves the corpus-sized "cold" relation to the
-        # broadcast planner (AQE broadcasting it blew
-        # spark.driver.maxResultSize at the 100x replica tier). The
-        # window shuffles shingles ONCE on (blk, shingle) — exactly the
-        # partitioning the a/b self-join consumes — and sh has one row
-        # per (doc, distinct shingle), so a plain count IS the df.
-        from pyspark.sql import Window as _W
-
-        sh_cold = (
-            sh.withColumn(
-                "_df", F.count(F.lit(1)).over(_W.partitionBy("_blk", "_sh"))
-            )
-            .filter(F.col("_df") <= max_shingle_df)
-            .drop("_df")
-        )
-        a = sh_cold.select(F.col("_blk"), F.col(id_col).alias("id_a"), "_sh")
-        b = sh_cold.select(F.col("_blk"), F.col(id_col).alias("id_b"), "_sh")
-        # merge hint (r13): see the uncapped site below — same
-        # corpus-sized exploded build side, same estimator blind spot
-        cand = (
-            a.join(b.hint("merge"), ["_blk", "_sh"])
-            .filter(F.col("id_a") < F.col("id_b"))
-            .select("id_a", "id_b")
-            .distinct()
-        )
-        xa = docsh.select(F.col(id_col).alias("id_a"), F.col("_shs").alias("_sa"))
-        xb = docsh.select(F.col(id_col).alias("id_b"), F.col("_shs").alias("_sb"))
-        inter_sz = F.size(F.array_intersect("_sa", "_sb")).cast("double")
-        return (
-            cand.join(xa, "id_a")
-            .join(xb, "id_b")
-            .withColumn("cont_a", inter_sz / F.size("_sa").cast("double"))
-            .withColumn("cont_b", inter_sz / F.size("_sb").cast("double"))
-            .filter(F.greatest("cont_a", "cont_b") >= threshold)
-            .select("id_a", "id_b", "cont_a", "cont_b")
-        )
-
-    sizes = docsh.select(F.col(id_col), F.size("_shs").alias("_n"))
-    a = sh.select(F.col("_blk"), F.col(id_col).alias("id_a"), "_sh")
-    b = sh.select(F.col("_blk"), F.col(id_col).alias("id_b"), "_sh")
-    # merge hint (r13): the exploded (block, shingle) table is
-    # corpus-sized, but the planner sizes it from the checkpointed
-    # doc-level sketch and BROADCASTS one whole side (plan evidence
-    # plans/r12: BroadcastHashJoin over both shingle sides). The SMJ is
-    # the only shape that exists at 100 TB and measured at-or-better at
-    # every bench tier (see OPTIMIZATION_r13.md, sparse-join family).
-    inter = (
-        a.join(b.hint("merge"), ["_blk", "_sh"])
-        .filter(F.col("id_a") < F.col("id_b"))
-        .groupBy("id_a", "id_b")
-        .agg(F.count(F.lit(1)).alias("_inter"))
-    )
-    sa = sizes.select(F.col(id_col).alias("id_a"), F.col("_n").alias("_na"))
-    sb = sizes.select(F.col(id_col).alias("id_b"), F.col("_n").alias("_nb"))
+    ov = _shingle_overlap(df, id_col, text_col, block_col, shingle_n, max_shingle_df)
+    inter = F.col("_inter").cast("double")
     return (
-        inter.join(sa, "id_a")
-        .join(sb, "id_b")
-        .withColumn("cont_a", F.col("_inter").cast("double") / F.col("_na").cast("double"))
-        .withColumn("cont_b", F.col("_inter").cast("double") / F.col("_nb").cast("double"))
+        ov.withColumn("cont_a", inter / F.col("_na").cast("double"))
+        .withColumn("cont_b", inter / F.col("_nb").cast("double"))
         .filter(F.greatest("cont_a", "cont_b") >= threshold)
         .select("id_a", "id_b", "cont_a", "cont_b")
     )
@@ -823,10 +752,8 @@ def shared_span_pairs(
         #    both explodes consume the window's (blk, gram) partitioning
         #    — one exchange for the entire candidate generation, one
         #    lineage, nothing computed twice.
-        from pyspark.sql import Window as _W
-
-        wo = _W.partitionBy("_blk", "_g").orderBy(id_col)
-        wp = _W.partitionBy("_blk", "_g")
+        wo = Window.partitionBy("_blk", "_g").orderBy(id_col)
+        wp = Window.partitionBy("_blk", "_g")
         surv = (
             # implicit window exchange at spark.sql.shuffle.partitions —
             # r12's explicit repartition(4*par, blk, gram) "spill fix"
@@ -911,8 +838,6 @@ def shared_span_pairs(
             .filter(F.col("id_a") < F.col("id_b"))
             .select("id_a", "id_b", "_ia", "_ib")
         )
-    from pyspark.sql import Window
-
     diag = (F.col("_ia") - F.col("_ib")).alias("_diag")
     w = Window.partitionBy("id_a", "id_b", "_diag").orderBy("_ia")
     runs = (

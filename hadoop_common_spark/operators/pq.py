@@ -180,6 +180,62 @@ def pq_encode(
     )
 
 
+def _flat_codebooks(codebooks: DataFrame) -> DataFrame:
+    """One row holding every (sub, code, centroid), sorted — the
+    broadcast side each query builds its distance table from."""
+    return codebooks.agg(
+        F.array_sort(
+            F.collect_list(F.struct(F.col("sub"), F.col("code"), F.col("centroid")))
+        ).alias("_cb")
+    )
+
+
+def _adc_table(ksub: int, dsub: int) -> Column:
+    """A query's ADC distance table over the ``_cb`` codebook row: the
+    squared distance from the query's subvector (``_qv`` slice) to every
+    subspace centroid."""
+    # map keyed by sub*ksub+code, NOT a positional array: with fewer
+    # than ksub sampled rows the codebook has fewer codes per subspace,
+    # and positional indexing would read another subspace's entry (or
+    # off the end) — the map stays correct for any actual code set
+    return F.map_from_entries(
+        F.transform(
+            F.col("_cb"),
+            lambda c: F.struct(
+                (c["sub"] * ksub + c["code"]).cast("int").alias("key"),
+                _sq_dist(
+                    F.slice(F.col("_qv"), c["sub"] * dsub + 1, dsub), c["centroid"]
+                ).alias("value"),
+            ),
+        )
+    )
+
+
+def _adc_top_k(cand: DataFrame, k: int, m: int, ksub: int) -> DataFrame:
+    """(query_id, neighbor_id, rank, adc): the k nearest of each query's
+    (neighbor_id, codes, _dtab) candidates, the query itself excluded.
+    ``adc`` folds the m table lookups in ascending subspace order."""
+    adc = F.aggregate(
+        F.sequence(F.lit(0), F.lit(m - 1)),
+        F.lit(0.0),
+        lambda acc, s: acc
+        + F.element_at(
+            F.col("_dtab"), (s * ksub + F.element_at(F.col("codes"), s + 1)).cast("int")
+        ),
+    )
+    scored = (
+        cand.filter(F.col("neighbor_id") != F.col("query_id"))
+        .withColumn("adc", adc)
+        .select("query_id", "neighbor_id", "adc")
+    )
+    w = Window.partitionBy("query_id").orderBy(F.asc("adc"), F.asc("neighbor_id"))
+    return (
+        scored.withColumn("rank", F.row_number().over(w))
+        .filter(F.col("rank") <= k)
+        .select("query_id", "neighbor_id", "rank", "adc")
+    )
+
+
 def pq_adc_search(
     queries: DataFrame,
     codes: DataFrame,
@@ -200,53 +256,15 @@ def pq_adc_search(
     only shuffle is the final per-query top-k window. Approximate
     distance `adc` folds in ascending subspace order — bit-identical in
     any engine with a left-fold list reduce."""
-    flat = codebooks.agg(
-        F.array_sort(
-            F.collect_list(F.struct(F.col("sub"), F.col("code"), F.col("centroid")))
-        ).alias("_cb")
-    )
     qd = F.transform(F.col(vec_col), lambda x: x.cast("double"))
     q = queries.select(F.col(id_col).alias("query_id"), qd.alias("_qv")).crossJoin(
-        F.broadcast(flat)
+        F.broadcast(_flat_codebooks(codebooks))
     )
-    # map keyed by sub*ksub+code, NOT a positional array: with fewer
-    # than ksub sampled rows the codebook has fewer codes per subspace,
-    # and positional indexing would read another subspace's entry (or
-    # off the end) — the map stays correct for any actual code set
-    dtab = F.map_from_entries(
-        F.transform(
-            F.col("_cb"),
-            lambda c: F.struct(
-                (c["sub"] * ksub + c["code"]).cast("int").alias("key"),
-                _sq_dist(
-                    F.slice(F.col("_qv"), c["sub"] * dsub + 1, dsub), c["centroid"]
-                ).alias("value"),
-            ),
-        )
-    )
-    q = q.select("query_id", dtab.alias("_dtab"))
+    q = q.select("query_id", _adc_table(ksub, dsub).alias("_dtab"))
     pairs = codes.select(F.col(id_col).alias("neighbor_id"), "codes").crossJoin(
         F.broadcast(q)
     )
-    adc = F.aggregate(
-        F.sequence(F.lit(0), F.lit(m - 1)),
-        F.lit(0.0),
-        lambda acc, s: acc
-        + F.element_at(
-            F.col("_dtab"), (s * ksub + F.element_at(F.col("codes"), s + 1)).cast("int")
-        ),
-    )
-    scored = (
-        pairs.filter(F.col("neighbor_id") != F.col("query_id"))
-        .withColumn("adc", adc)
-        .select("query_id", "neighbor_id", "adc")
-    )
-    w = Window.partitionBy("query_id").orderBy(F.asc("adc"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank", "adc")
-    )
+    return _adc_top_k(pairs, k, m, ksub)
 
 
 def ivfpq_search(
@@ -281,16 +299,11 @@ def ivfpq_search(
             F.collect_list(F.struct(F.col("cell"), F.col("centroid")))
         ).alias("_cents")
     )
-    flat = codebooks.agg(
-        F.array_sort(
-            F.collect_list(F.struct(F.col("sub"), F.col("code"), F.col("centroid")))
-        ).alias("_cb")
-    )
     qd = F.transform(F.col(vec_col), lambda x: x.cast("double"))
     q = (
         queries.select(F.col(id_col).alias("query_id"), qd.alias("_qv"))
         .crossJoin(F.broadcast(cents))
-        .crossJoin(F.broadcast(flat))
+        .crossJoin(F.broadcast(_flat_codebooks(codebooks)))
     )
     ranked_cells = F.slice(
         F.array_sort(
@@ -305,43 +318,12 @@ def ivfpq_search(
         1,
         nprobe,
     )
-    # map keyed by sub*ksub+code, NOT a positional array: with fewer
-    # than ksub sampled rows the codebook has fewer codes per subspace,
-    # and positional indexing would read another subspace's entry (or
-    # off the end) — the map stays correct for any actual code set
-    dtab = F.map_from_entries(
-        F.transform(
-            F.col("_cb"),
-            lambda c: F.struct(
-                (c["sub"] * ksub + c["code"]).cast("int").alias("key"),
-                _sq_dist(
-                    F.slice(F.col("_qv"), c["sub"] * dsub + 1, dsub), c["centroid"]
-                ).alias("value"),
-            ),
-        )
-    )
     probes = q.select(
-        "query_id", dtab.alias("_dtab"), F.explode(ranked_cells).alias("_pc")
+        "query_id",
+        _adc_table(ksub, dsub).alias("_dtab"),
+        F.explode(ranked_cells).alias("_pc"),
     ).select("query_id", "_dtab", F.col("_pc.cell").alias("cell"))
     cand = index_codes.select(
         F.col(id_col).alias("neighbor_id"), "cell", "codes"
     ).join(F.broadcast(probes), "cell")
-    adc = F.aggregate(
-        F.sequence(F.lit(0), F.lit(m - 1)),
-        F.lit(0.0),
-        lambda acc, s: acc
-        + F.element_at(
-            F.col("_dtab"), (s * ksub + F.element_at(F.col("codes"), s + 1)).cast("int")
-        ),
-    )
-    scored = (
-        cand.filter(F.col("neighbor_id") != F.col("query_id"))
-        .withColumn("adc", adc)
-        .select("query_id", "neighbor_id", "adc")
-    )
-    w = Window.partitionBy("query_id").orderBy(F.asc("adc"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank", "adc")
-    )
+    return _adc_top_k(cand, k, m, ksub)

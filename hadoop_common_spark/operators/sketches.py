@@ -22,7 +22,7 @@ this extends §2.5 the same way the OLAP tier does.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from hadoop_common_spark.operators.dedup import hash60

@@ -21,7 +21,7 @@ from __future__ import annotations
 
 import io
 import struct
-from typing import Any, Iterator
+from typing import Any, Callable, Iterator
 
 from pyspark.sql import DataFrame
 from pyspark.sql import types as T
@@ -132,6 +132,58 @@ class _Pushback(io.RawIOBase):
         return self._rest.read(n)
 
 
+def _pipe_partitions(
+    command: list[str],
+    encode_row: Callable[[Any], bytes],
+    decode: Callable[[io.BufferedIOBase], Iterator[tuple]],
+    feed_failed: str,
+) -> Callable[[Iterator], Iterator[tuple]]:
+    """The per-partition runner both binary framings share: fork
+    ``command`` once, feed ``encode_row(row)`` bytes to its stdin from a
+    writer thread while ``decode(stdout)`` yields output rows, then
+    surface a feed error (as ``"<feed_failed> <command>"``) or a non-zero
+    exit."""
+
+    def run_partition(rows: Iterator) -> Iterator[tuple]:
+        import subprocess
+        import threading
+
+        proc = subprocess.Popen(
+            command, stdin=subprocess.PIPE, stdout=subprocess.PIPE, bufsize=1 << 16
+        )
+        feed_error: list[BaseException] = []
+
+        def feed():
+            # stdin MUST close on every path: a row the encoder can't
+            # frame (unsupported type) would otherwise leave the child
+            # waiting for EOF and hang the task forever with the real
+            # error swallowed in this thread.
+            try:
+                for row in rows:
+                    proc.stdin.write(encode_row(row))
+            except BrokenPipeError:
+                pass
+            except BaseException as e:  # surfaced after the drain loop
+                feed_error.append(e)
+            finally:
+                try:
+                    proc.stdin.close()
+                except BrokenPipeError:
+                    pass
+
+        writer = threading.Thread(target=feed, daemon=True)
+        writer.start()
+        yield from decode(proc.stdout)
+        writer.join()
+        rc = proc.wait()
+        if feed_error:
+            raise RuntimeError(f"{feed_failed} {command!r}") from feed_error[0]
+        if rc != 0:
+            raise RuntimeError(f"piped command {command!r} exited {rc}")
+
+    return run_partition
+
+
 def pipe_raw_bytes(
     df: DataFrame,
     command: list[str],
@@ -175,35 +227,11 @@ def pipe_raw_bytes(
             f"rawbytes framing needs BINARY or STRING columns, got {type(v).__name__}"
         )
 
-    def run_partition(rows: Iterator) -> Iterator[tuple]:
-        import subprocess
-        import threading
+    def encode_row(row) -> bytes:
+        k, v = to_bytes(row[kc]), to_bytes(row[vc])
+        return struct.pack(">i", len(k)) + k + struct.pack(">i", len(v)) + v
 
-        proc = subprocess.Popen(
-            command, stdin=subprocess.PIPE, stdout=subprocess.PIPE, bufsize=1 << 16
-        )
-        feed_error: list[BaseException] = []
-
-        def feed():
-            try:
-                for row in rows:
-                    k, v = to_bytes(row[kc]), to_bytes(row[vc])
-                    proc.stdin.write(struct.pack(">i", len(k)) + k)
-                    proc.stdin.write(struct.pack(">i", len(v)) + v)
-            except BrokenPipeError:
-                pass
-            except BaseException as e:
-                feed_error.append(e)
-            finally:
-                try:
-                    proc.stdin.close()
-                except BrokenPipeError:
-                    pass
-
-        writer = threading.Thread(target=feed, daemon=True)
-        writer.start()
-        out = proc.stdout
-
+    def decode(out) -> Iterator[tuple]:
         def read_blob() -> bytes | None:
             hdr = out.read(4)
             if not hdr:
@@ -223,20 +251,15 @@ def pipe_raw_bytes(
         while True:
             k = read_blob()
             if k is None:
-                break
+                return
             v = read_blob()
             if v is None:
                 raise EOFError("rawbytes stream ended mid-record (key without value)")
             yield (bytearray(k), bytearray(v))
-        writer.join()
-        rc = proc.wait()
-        if feed_error:
-            raise RuntimeError(
-                f"rawbytes framing failed feeding {command!r}"
-            ) from feed_error[0]
-        if rc != 0:
-            raise RuntimeError(f"piped command {command!r} exited {rc}")
 
+    run_partition = _pipe_partitions(
+        command, encode_row, decode, "rawbytes framing failed feeding"
+    )
     out_schema = T.StructType(
         [T.StructField("key", T.BinaryType()), T.StructField("value", T.BinaryType())]
     )
@@ -258,54 +281,23 @@ def pipe_typed_bytes(
     spark = df.sparkSession
     field_names = [f.name for f in out_schema.fields]
 
-    def run_partition(rows: Iterator) -> Iterator[tuple]:
-        import subprocess
-        import threading
+    def encode_row(row) -> bytes:
+        buf = io.BytesIO()
+        tb_encode(list(row), buf)
+        return buf.getvalue()
 
-        proc = subprocess.Popen(
-            command, stdin=subprocess.PIPE, stdout=subprocess.PIPE, bufsize=1 << 16
-        )
-
-        feed_error: list[BaseException] = []
-
-        def feed():
-            # stdin MUST close on every path: a row tb_encode can't frame
-            # (unsupported type) would otherwise leave the child waiting
-            # for EOF and hang the task forever with the real error
-            # swallowed in this thread.
-            try:
-                for row in rows:
-                    buf = io.BytesIO()
-                    tb_encode(list(row), buf)
-                    proc.stdin.write(buf.getvalue())
-            except BrokenPipeError:
-                pass
-            except BaseException as e:  # surfaced after the drain loop
-                feed_error.append(e)
-            finally:
-                try:
-                    proc.stdin.close()
-                except BrokenPipeError:
-                    pass
-
-        writer = threading.Thread(target=feed, daemon=True)
-        writer.start()
-        out = io.BufferedReader(proc.stdout.raw if hasattr(proc.stdout, "raw") else proc.stdout)
+    def decode(stdout) -> Iterator[tuple]:
+        out = io.BufferedReader(stdout.raw if hasattr(stdout, "raw") else stdout)
         while True:
             try:
                 vec = tb_decode(out)
             except EOFError:
-                break
+                return
             yield tuple(vec)
-        writer.join()
-        rc = proc.wait()
-        if feed_error:
-            raise RuntimeError(
-                f"typed-bytes encode failed feeding {command!r}"
-            ) from feed_error[0]
-        if rc != 0:
-            raise RuntimeError(f"piped command {command!r} exited {rc}")
 
+    run_partition = _pipe_partitions(
+        command, encode_row, decode, "typed-bytes encode failed feeding"
+    )
     assert field_names  # typed-bytes output is shaped by out_schema
     out_rdd = df.rdd.mapPartitions(run_partition)
     return spark.createDataFrame(out_rdd, schema=out_schema)

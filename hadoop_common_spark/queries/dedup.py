@@ -294,8 +294,11 @@ def dedup_minhash_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_CC_ORACLE = f"""
-WITH RECURSIVE {_MINHASH_CTES},
+# The MinHash-LSH pairs (J >= 0.5) and their connected components
+# (lbl: doc_id -> min reachable doc_id, pair members only) — the prefix
+# every cluster oracle below shares. DuckDB computes the fixpoint with a
+# recursive CTE; the Spark side is _minhash_components.
+_CC_CTES = f"""WITH RECURSIVE {_MINHASH_CTES},
 pairs AS (
   {_JACCARD_SELECT}
 ),
@@ -311,12 +314,28 @@ reach(u, v) AS (
 ),
 lbl AS (
   SELECT u AS doc_id, LEAST(u, MIN(v)) AS cluster_id FROM reach GROUP BY u
-)
+)"""
+
+_CC_ORACLE = f"""
+{_CC_CTES}
 SELECT d.doc_id,
        COALESCE(l.cluster_id, d.doc_id) AS cluster_id,
        COALESCE(l.cluster_id, d.doc_id) = d.doc_id AS is_canonical
 FROM documents d LEFT JOIN lbl l ON d.doc_id = l.doc_id
 """
+
+
+def _minhash_components(spark: SparkSession) -> tuple[DataFrame, DataFrame]:
+    """(documents, components): MinHash-LSH pairs (J >= 0.5) labeled by
+    connected component — ``(node, component)`` rows, pair members only —
+    the Spark side of _CC_CTES."""
+    from hadoop_common_spark.operators.graph import connected_components
+
+    docs = spark.table("documents")
+    pairs = minhash_lsh_pairs(
+        docs, "doc_id", "text", num_hashes=NUM_HASHES, bands=BANDS, threshold=0.5
+    )
+    return docs, connected_components(pairs, "id_a", "id_b")
 
 
 @query("dedup_cluster_resolution", oracle=_CC_ORACLE)
@@ -328,13 +347,7 @@ def dedup_cluster_resolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     its cluster and whether it survives. Components via hash-min label
     propagation + pointer jumping (O(log n) rounds — operators/graph.py);
     the oracle computes the same fixpoint with a recursive CTE."""
-    from hadoop_common_spark.operators.graph import connected_components
-
-    docs = spark.table("documents")
-    pairs = minhash_lsh_pairs(
-        docs, "doc_id", "text", num_hashes=NUM_HASHES, bands=BANDS, threshold=0.5
-    )
-    cc = connected_components(pairs, "id_a", "id_b")
+    docs, cc = _minhash_components(spark)
     cluster = F.coalesce(F.col("component"), F.col("doc_id"))
     return (
         docs.select("doc_id")
@@ -578,23 +591,7 @@ def dedup_containment_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 # whichever variant crawled first (often the truncated or
 # boilerplate-wrapped one).
 _CANONICAL_QUALITY_ORACLE = f"""
-WITH RECURSIVE {_MINHASH_CTES},
-pairs AS (
-  {_JACCARD_SELECT}
-),
-sym AS (
-  SELECT id_a AS u, id_b AS v FROM pairs
-  UNION ALL
-  SELECT id_b, id_a FROM pairs
-),
-reach(u, v) AS (
-  SELECT u, v FROM sym
-  UNION
-  SELECT r.u, s.v FROM reach r JOIN sym s ON r.v = s.u
-),
-lbl AS (
-  SELECT u AS doc_id, LEAST(u, MIN(v)) AS cluster_id FROM reach GROUP BY u
-),
+{_CC_CTES},
 mem AS (
   SELECT l.cluster_id, d.doc_id, d.n_chars
   FROM lbl l JOIN documents d ON l.doc_id = d.doc_id
@@ -625,13 +622,7 @@ def dedup_canonical_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     GROUPS with their chosen survivor — the form a removal job joins
     against. Scale: one groupBy over cluster members; the argmax is a
     struct-min aggregate (no window, no second shuffle)."""
-    from hadoop_common_spark.operators.graph import connected_components
-
-    docs = spark.table("documents")
-    pairs = minhash_lsh_pairs(
-        docs, "doc_id", "text", num_hashes=NUM_HASHES, bands=BANDS, threshold=0.5
-    )
-    cc = connected_components(pairs, "id_a", "id_b")
+    docs, cc = _minhash_components(spark)
     mem = cc.join(
         docs.select("doc_id", F.col("n_chars").cast("bigint").alias("_nc")),
         cc["node"] == F.col("doc_id"),
@@ -652,23 +643,7 @@ def dedup_canonical_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
 # watches per crawl/source: which fraction of each source's docs would a
 # near-dup pass drop (cluster member, not the min-id canonical).
 _DEDUP_RATE_ORACLE = f"""
-WITH RECURSIVE {_MINHASH_CTES},
-pairs AS (
-  {_JACCARD_SELECT}
-),
-sym AS (
-  SELECT id_a AS u, id_b AS v FROM pairs
-  UNION ALL
-  SELECT id_b, id_a FROM pairs
-),
-reach(u, v) AS (
-  SELECT u, v FROM sym
-  UNION
-  SELECT r.u, s.v FROM reach r JOIN sym s ON r.v = s.u
-),
-lbl AS (
-  SELECT u AS doc_id, LEAST(u, MIN(v)) AS cluster_id FROM reach GROUP BY u
-)
+{_CC_CTES}
 SELECT d.source, COUNT(*) AS n_docs,
        CAST(SUM(CASE WHEN l.cluster_id IS NOT NULL AND l.cluster_id <> d.doc_id
                      THEN 1 ELSE 0 END) AS BIGINT) AS n_dropped,
@@ -687,13 +662,7 @@ def corpus_dedup_rate_by_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     dedup_cluster_resolution — the number that flags a source whose
     crawl suddenly turns self-duplicative. Scale: the CC labeling is the
     same bounded pipeline; the report is one groupBy over documents."""
-    from hadoop_common_spark.operators.graph import connected_components
-
-    docs = spark.table("documents")
-    pairs = minhash_lsh_pairs(
-        docs, "doc_id", "text", num_hashes=NUM_HASHES, bands=BANDS, threshold=0.5
-    )
-    cc = connected_components(pairs, "id_a", "id_b")
+    docs, cc = _minhash_components(spark)
     dropped = (
         F.col("component").isNotNull() & (F.col("component") != F.col("doc_id"))
     ).cast("int")

@@ -10,11 +10,8 @@ from hadoop_common_spark.operators.similarity import (
     cosine,
     cosine_sql,
     cosine_topk_bruteforce,
-    dot_exact_udf,
-    sign_lsh_band_keys,
     sign_lsh_band_keys_sql,
     sign_lsh_band_keys_udf,
-    sign_lsh_bucket,
     sign_lsh_bucket_sql,
     sign_lsh_bucket_udf,
 )

@@ -8,6 +8,8 @@ regression here is invisible at sf0.01 and fatal at 100 TB.
 
 from __future__ import annotations
 
+import re
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -496,6 +498,17 @@ def test_minhash_recall_eval_no_cartesian(spark, sf_dir, registry):
     assert "CartesianProduct" not in plan
     assert "BroadcastNestedLoopJoin" not in plan
     assert "band_key" in plan  # candidate leg really joins on the band key
+
+
+@pytest.mark.parametrize("name", ["dedup_ngram_jaccard", "dedup_containment_pairs"])
+def test_shingle_self_join_is_sort_merge(spark, sf_dir, registry, name):
+    """The sparse (block, shingle) self-join carries a merge hint: the
+    exploded shingle table is corpus-sized, but the planner sizes it from
+    the checkpointed doc-level sketch and would broadcast a whole side
+    (the hinted sort-merge ran about 2x faster at the 10x tier)."""
+    plan = re.sub(r"#\d+L?", "", plan_of(registry[name].fn(spark, sf_dir)))
+    assert "SortMergeJoin [_blk, _sh], [_blk, _sh]" in plan
+    assert not re.search(r"BroadcastHashJoin \[[^\]]*\b_sh\b", plan)
 
 
 def test_fleet_wide_plan_audit_clean(spark, sf_dir):

@@ -12,6 +12,11 @@ rounding), and Decimal is NOT normalized to float. Representation-level
 divergence (DECIMAL-vs-DOUBLE, HUGEINT widening) fails here before it
 fails at the driver. Default mode keeps the forgiving comparison for
 semantic debugging.
+
+Every result line carries ``plan=<fingerprint>``: bench.plan_fingerprint
+of the query's physical plan, taken after the build and before the
+collect (``-`` when the build itself failed). Diffing the plan columns of
+two sweep logs shows which queries a change re-planned.
 """
 
 from __future__ import annotations
@@ -114,6 +119,7 @@ def main():
     filters = argv[1:]
     norm = _norm_strict if strict else _norm
 
+    from bench import plan_fingerprint
     from hadoop_common_spark.queries import load_all
     from hadoop_common_spark.session import get_spark
     from hadoop_common_spark.tables import TABLE_NAMES
@@ -151,18 +157,20 @@ def main():
         if filters and not any(f in name for f in filters):
             continue
         t0 = time.time()
+        plan = "-"
         try:
             sdf = qd.fn(spark, sf_dir)
             scols = sdf.columns
+            plan = plan_fingerprint(sdf)
             srows = [tuple(r) for r in sdf.collect()]
         except Exception as e:
             n_fail += 1
             failures.append(name)
-            print(f"FAIL  {name}: spark error: {type(e).__name__}: {e}")
+            print(f"FAIL  {name}: plan={plan} spark error: {type(e).__name__}: {e}")
             continue
         if qd.oracle is None:
             n_rowsonly += 1
-            print(f"rows  {name}: {len(srows)} rows (no oracle) [{time.time()-t0:.1f}s]")
+            print(f"rows  {name}: plan={plan} {len(srows)} rows (no oracle) [{time.time()-t0:.1f}s]")
             continue
         try:
             con = fresh_con()
@@ -178,24 +186,24 @@ def main():
         except Exception as e:
             n_fail += 1
             failures.append(name)
-            print(f"FAIL  {name}: duckdb error: {type(e).__name__}: {e}")
+            print(f"FAIL  {name}: plan={plan} duckdb error: {type(e).__name__}: {e}")
             continue
         ok = True
         if sorted(scols) != sorted(dcols):
             ok = False
-            print(f"FAIL  {name}: columns spark={sorted(scols)} duck={sorted(dcols)}")
+            print(f"FAIL  {name}: plan={plan} columns spark={sorted(scols)} duck={sorted(dcols)}")
         elif len(srows) != len(drows):
             ok = False
-            print(f"FAIL  {name}: rowcount spark={len(srows)} duck={len(drows)}")
+            print(f"FAIL  {name}: plan={plan} rowcount spark={len(srows)} duck={len(drows)}")
         else:
             s, d = _rowset(scols, srows, norm), _rowset(dcols, drows, norm)
             if s != d:
                 ok = False
                 diff = [(a, b) for a, b in zip(s, d) if a != b][:3]
-                print(f"FAIL  {name}: value mismatch; first diffs: {diff}")
+                print(f"FAIL  {name}: plan={plan} value mismatch; first diffs: {diff}")
         if ok:
             n_pass += 1
-            print(f"ok    {name}: {len(srows)} rows [{time.time()-t0:.1f}s]")
+            print(f"ok    {name}: plan={plan} {len(srows)} rows [{time.time()-t0:.1f}s]")
         else:
             n_fail += 1
             failures.append(name)
