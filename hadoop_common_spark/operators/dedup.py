@@ -16,6 +16,11 @@ asks for, built Spark-first:
   and the final verify join. Signature computation is map-side (16 min()
   partial aggregates). At 100 TB the band join's fan-out is bounded by
   bucket sizes — salt or raise `bands`/`rows` if a bucket explodes.
+- Two renderings per shared expression: ``*_sql`` helpers render the
+  DuckDB oracle text; ``*_sparksql`` helpers render Spark SQL text that
+  the operators hand to ``F.expr``/``selectExpr`` in ONE py4j call, where
+  the equivalent Column tree costs a round trip per node (a MinHash-LSH
+  build was ~1,100 of them).
 """
 
 from __future__ import annotations
@@ -41,6 +46,11 @@ def _mh_coeffs(j: int) -> tuple[int, int]:
     a = int(hashlib.md5(f"mh_a_{j}".encode()).hexdigest()[:7], 16) | 1
     b = int(hashlib.md5(f"mh_b_{j}".encode()).hexdigest()[:7], 16)
     return a, b
+
+
+def _q(name: str) -> str:
+    """A column name as a Spark SQL identifier."""
+    return "`" + name.replace("`", "``") + "`"
 
 
 def hash60(c: Column) -> Column:
@@ -72,23 +82,28 @@ def split_90_5_5_sql(id_expr: str) -> str:
     )
 
 
-def hash32(c: Column) -> Column:
-    """Deterministic 32-bit integer hash (md5 prefix) — the MinHash base."""
-    return F.conv(F.substring(F.md5(c), 1, 8), 16, 10).cast("bigint")
+def hash32_sparksql(expr: str) -> str:
+    """Deterministic 32-bit integer hash (md5 prefix) of a Spark SQL
+    string expression — the MinHash base."""
+    return f"CAST(conv(substring(md5({expr}), 1, 8), 16, 10) AS BIGINT)"
 
 
 def hash32_sql(expr: str) -> str:
+    """DuckDB rendering of :func:`hash32_sparksql`."""
     return f"('0x' || substr(md5({expr}), 1, 8))::BIGINT"
 
 
-def minhash_j(base: Column, j: int) -> Column:
+def minhash_j_sparksql(base_expr: str, j: int) -> str:
+    """The j-th MinHash function ``(a_j * base + b_j) mod P`` over a
+    Spark SQL bigint expression."""
     a, b = _mh_coeffs(j)
-    return (F.lit(a) * base + F.lit(b)) % F.lit(MERSENNE61)
+    return f"(({a} * {base_expr} + {b}) % {MERSENNE61})"
 
 
 def minhash_j_sql(base_expr: str, j: int) -> str:
-    a, b = _mh_coeffs(j)
-    return f"(({a} * {base_expr} + {b}) % {MERSENNE61})"
+    """DuckDB rendering of :func:`minhash_j_sparksql` (the arithmetic
+    reads the same in both dialects)."""
+    return minhash_j_sparksql(base_expr, j)
 
 
 def exact_dedup(df: DataFrame, content_col: str, id_col: str) -> DataFrame:
@@ -105,9 +120,9 @@ def exact_dedup(df: DataFrame, content_col: str, id_col: str) -> DataFrame:
     )
 
 
-def word_shingles(text_col: str, n: int = 3) -> Column:
-    """Distinct word n-gram shingles of a text column (docs with <n
-    tokens yield an empty array).
+def word_shingles_sparksql(text_expr: str, n: int = 3) -> str:
+    """Spark SQL text: distinct word n-gram shingles of a string
+    expression (docs with <n tokens yield an empty array).
 
     Built as ``zip_with`` over n shifted ``slice``s of the token array —
     NOT ``transform(sequence(...), i -> element_at(toks, i+k))``: inside
@@ -115,14 +130,20 @@ def word_shingles(text_col: str, n: int = 3) -> Column:
     so the indexed form splits the text ~n× per GRAM (~150× per doc;
     measured 5× slower end-to-end). The slice form references ``toks``
     O(n) times per ROW."""
-    toks = F.split(F.col(text_col), r"\s+")
-    m = F.greatest(F.size(toks) - (n - 1), F.lit(0))
-    zipped = F.slice(toks, 1, m)
+    toks = f"split({text_expr}, '\\\\s+', -1)"
+    m = f"greatest(size({toks}) - {n - 1}, 0)"
+    zipped = f"slice({toks}, 1, {m})"
     for k in range(1, n):
-        zipped = F.zip_with(
-            zipped, F.slice(toks, k + 1, m), lambda x, y: F.concat_ws(" ", x, y)
+        zipped = (
+            f"zip_with({zipped}, slice({toks}, {k + 1}, {m}), "
+            "(x, y) -> concat_ws(' ', x, y))"
         )
-    return F.array_distinct(zipped)
+    return f"array_distinct({zipped})"
+
+
+def word_shingles(text_col: str, n: int = 3) -> Column:
+    """:func:`word_shingles_sparksql` of the column ``text_col``."""
+    return F.expr(word_shingles_sparksql(_q(text_col), n))
 
 
 def minhash_signature(
@@ -141,11 +162,18 @@ def minhash_signature(
     boundary after shingling, so it runs once, and the shuffle is
     map-side partial-aggregated down to one row per document (combiner
     semantics — fine at 100 TB)."""
-    sh = df.select(
-        F.col(id_col), F.explode(word_shingles(text_col, shingle_n)).alias("_sh")
-    ).withColumn("_base", hash32(F.col("_sh")))
-    aggs = [F.min(minhash_j(F.col("_base"), j)).alias(f"h{j}") for j in range(num_hashes)]
-    return sh.groupBy(id_col).agg(*aggs)
+    sh = df.selectExpr(
+        _q(id_col), f"explode({word_shingles_sparksql(_q(text_col), shingle_n)}) AS _sh"
+    ).withColumn("_base", F.expr(hash32_sparksql("_sh")))
+    return sh.groupBy(id_col).agg(*_minhash_aggs(num_hashes))
+
+
+def _minhash_aggs(num_hashes: int) -> list[Column]:
+    """``min(h_j(_base)) AS h{j}`` for every hash function."""
+    return [
+        F.expr(f"min({minhash_j_sparksql('_base', j)}) AS h{j}")
+        for j in range(num_hashes)
+    ]
 
 
 def minhash_signature_mapside(
@@ -166,13 +194,18 @@ def minhash_signature_mapside(
     right trade. Docs with no shingles (shorter than ``shingle_n``
     words) are dropped, matching the groupBy form where they produce no
     rows."""
-    hashed = F.transform(word_shingles(text_col, shingle_n), lambda s: hash32(s))
-    out = df.withColumn("_hashes", hashed).filter(F.size("_hashes") > 0)
-    sig_cols = [
-        F.array_min(F.transform(F.col("_hashes"), lambda h: minhash_j(h, j))).alias(f"h{j}")
-        for j in range(num_hashes)
-    ]
-    return out.select(F.col(id_col), *sig_cols)
+    hashed = (
+        f"transform({word_shingles_sparksql(_q(text_col), shingle_n)}, "
+        f"x -> {hash32_sparksql('x')})"
+    )
+    out = df.withColumn("_hashes", F.expr(hashed)).filter("size(_hashes) > 0")
+    return out.selectExpr(
+        _q(id_col),
+        *[
+            f"array_min(transform(_hashes, x -> {minhash_j_sparksql('x', j)})) AS h{j}"
+            for j in range(num_hashes)
+        ],
+    )
 
 
 def lsh_band_keys(sig_df: DataFrame, id_col: str, bands: int, rows: int) -> DataFrame:
@@ -180,12 +213,11 @@ def lsh_band_keys(sig_df: DataFrame, id_col: str, bands: int, rows: int) -> Data
     band_key are candidates (AND within band, OR across bands)."""
     band_structs = []
     for b in range(bands):
-        cols = [F.col(f"h{b * rows + r}") for r in range(rows)]
-        key = F.md5(F.concat_ws(",", *[c.cast("string") for c in cols]))
-        band_structs.append(F.struct(F.lit(b).alias("band"), key.alias("band_key")))
-    return sig_df.select(
-        F.col(id_col), F.explode(F.array(*band_structs)).alias("_b")
-    ).select(id_col, F.col("_b.band").alias("band"), F.col("_b.band_key").alias("band_key"))
+        vals = ", ".join(f"CAST(h{b * rows + r} AS STRING)" for r in range(rows))
+        band_structs.append(f"struct({b} AS band, md5(concat_ws(',', {vals})) AS band_key)")
+    return sig_df.selectExpr(
+        _q(id_col), f"explode(array({', '.join(band_structs)})) AS _b"
+    ).selectExpr(_q(id_col), "_b.band AS band", "_b.band_key AS band_key")
 
 
 def minhash_lsh_pairs(
@@ -224,15 +256,11 @@ def minhash_lsh_pairs(
     # MEMORY_AND_DISK and one row per doc (16 longs + the distinct
     # shingle set) — the "write the sketch table between stages" shape
     # simhash_pairs already uses.
-    sh_rows = df.select(
-        F.col(id_col), F.explode(word_shingles(text_col, shingle_n)).alias("_one")
-    ).withColumn("_base", hash32(F.col("_one")))
+    sh_rows = df.selectExpr(
+        _q(id_col), f"explode({word_shingles_sparksql(_q(text_col), shingle_n)}) AS _one"
+    ).withColumn("_base", F.expr(hash32_sparksql("_one")))
     sig = sh_rows.groupBy(id_col).agg(
-        *[
-            F.min(minhash_j(F.col("_base"), j)).alias(f"h{j}")
-            for j in range(num_hashes)
-        ],
-        F.collect_set("_one").alias("_shset"),
+        *_minhash_aggs(num_hashes), F.expr("collect_set(_one) AS _shset")
     ).localCheckpoint(eager=False)
     if max_bucket_size is None:
         # FIRST-MATCH-BAND candidate dedup (same trick as simhash_pairs):
@@ -248,32 +276,21 @@ def minhash_lsh_pairs(
         # strings, and 4 md5 calls per doc disappear. The capped path
         # keeps lsh_band_keys' md5 form — occupancy semantics there are
         # part of the oracle contract.
-        keys = [
-            F.struct(
-                *[F.col(f"h{b * rows + r}").alias(f"k{r}") for r in range(rows)]
-            )
+        keys = ", ".join(
+            "struct("
+            + ", ".join(f"h{b * rows + r} AS k{r}" for r in range(rows))
+            + ")"
             for b in range(bands)
-        ]
-        bk = sig.select(
-            F.col(id_col), F.array(*keys).alias("_keys")
-        ).select(
-            id_col, "_keys", F.posexplode("_keys").alias("band", "band_key")
         )
-        a = bk.select(
-            F.col(id_col).alias("id_a"), F.col("_keys").alias("_ka"), "band", "band_key"
+        bk = sig.selectExpr(_q(id_col), f"array({keys}) AS _keys").selectExpr(
+            _q(id_col), "_keys", "posexplode(_keys) AS (band, band_key)"
         )
-        b = bk.select(
-            F.col(id_col).alias("id_b"), F.col("_keys").alias("_kb"), "band", "band_key"
-        )
-        first_eq = F.coalesce(
-            *[
-                F.when(
-                    F.element_at("_ka", j + 1) == F.element_at("_kb", j + 1),
-                    F.lit(j),
-                )
-                for j in range(bands)
-            ]
-        )
+        a = bk.selectExpr(f"{_q(id_col)} AS id_a", "_keys AS _ka", "band", "band_key")
+        b = bk.selectExpr(f"{_q(id_col)} AS id_b", "_keys AS _kb", "band", "band_key")
+        first_eq = "coalesce(" + ", ".join(
+            f"CASE WHEN element_at(_ka, {j + 1}) = element_at(_kb, {j + 1}) THEN {j} END"
+            for j in range(bands)
+        ) + ")"
         cand = (
             # NO merge hint here, unlike the shingle/chunk self-joins: the
             # r13 A/B measured the SMJ form 2x WORSE at the 10x tier
@@ -283,9 +300,9 @@ def minhash_lsh_pairs(
             # per doc of fixed-width longs, the one estimator blind spot
             # in this family whose hash build actually wins.
             a.join(b, ["band", "band_key"])
-            .filter(F.col("id_a") < F.col("id_b"))
-            .filter(first_eq == F.col("band"))
-            .select("id_a", "id_b")
+            .filter("id_a < id_b")
+            .filter(f"{first_eq} = band")
+            .selectExpr("id_a", "id_b")
         )
     else:
         # occupancy guard (skew.capped_self_join_pairs rationale).
@@ -297,16 +314,16 @@ def minhash_lsh_pairs(
             id_col,
             max_bucket_size,
         )
-    sa = sig.select(F.col(id_col).alias("id_a"), F.col("_shset").alias("sh_a"))
-    sb = sig.select(F.col(id_col).alias("id_b"), F.col("_shset").alias("sh_b"))
-    inter = F.size(F.array_intersect(F.col("sh_a"), F.col("sh_b"))).cast("double")
-    union = (F.size("sh_a") + F.size("sh_b")).cast("double") - inter
+    sa = sig.selectExpr(f"{_q(id_col)} AS id_a", "_shset AS sh_a")
+    sb = sig.selectExpr(f"{_q(id_col)} AS id_b", "_shset AS sh_b")
+    inter = "CAST(size(array_intersect(sh_a, sh_b)) AS DOUBLE)"
+    union = f"CAST(size(sh_a) + size(sh_b) AS DOUBLE) - {inter}"
     return (
         cand.join(sa, "id_a")
         .join(sb, "id_b")
-        .withColumn("jaccard", inter / union)
-        .filter(F.col("jaccard") >= threshold)
-        .select("id_a", "id_b", "jaccard")
+        .withColumn("jaccard", F.expr(f"{inter} / ({union})"))
+        .filter(f"jaccard >= {float(threshold)!r}D")
+        .selectExpr("id_a", "id_b", "jaccard")
     )
 
 
@@ -853,9 +870,11 @@ def shared_span_pairs(
     )
 
 
-def deletion1_keys(c: Column) -> Column:
-    """SymSpell deletion-neighborhood blocking keys: the string itself
-    plus every single-character deletion, deduplicated. Two strings
+def deletion1_keys(expr: str) -> Column:
+    """SymSpell deletion-neighborhood blocking keys of a Spark SQL string
+    expression (a column name, or e.g. ``substring(c_name, 10, 9)``): the
+    string itself plus every single-character deletion, deduplicated,
+    built as one ``F.expr`` over :func:`deletion1_keys_sparksql`. Two strings
     within Levenshtein distance 1 ALWAYS share a key — a substitution
     at position i means del_i(a) == del_i(b); an insertion/deletion
     means the shorter string IS a deletion of the longer (and is its
@@ -868,15 +887,12 @@ def deletion1_keys(c: Column) -> Column:
     Reference parity note: the reference has no fuzzy matching at all;
     this extends §2.4's join family the same way as-of/range joins do.
     """
-    return F.array_distinct(
-        F.concat(
-            F.array(c),
-            F.transform(
-                F.sequence(F.lit(1), F.length(c)),
-                lambda i: F.concat(
-                    F.substring(c, F.lit(1), i - 1),
-                    c.substr(i + 1, F.length(c)),
-                ),
-            ),
-        )
+    return F.expr(deletion1_keys_sparksql(expr))
+
+
+def deletion1_keys_sparksql(expr: str) -> str:
+    """Spark SQL text of :func:`deletion1_keys` over a string expression."""
+    return (
+        f"array_distinct(concat(array({expr}), transform(sequence(1, length({expr})), "
+        f"x -> concat(substring({expr}, 1, x - 1), substr({expr}, x + 1, length({expr}))))))"
     )

@@ -123,8 +123,9 @@ def connected_components_blocked(
     nation, and each record has one nation).
 
     The disjoint-union structure turns the O(log n)-round iterative CC
-    into ONE shuffle on the block key + a per-block union-find inside an
-    Arrow `applyInPandas` kernel — no driver loop, no per-round
+    into ONE shuffle on the block key + a per-block union-find in a
+    ``groupBy().applyInArrow`` kernel over pyarrow tables (no pandas
+    frame is built per block) — no driver loop, no per-round
     checkpoint/convergence jobs. Per-task cost is O(E_block α); block
     occupancy is the same knob that already bounds candidate-pair
     generation, so a block that fits the pair join fits this too. For
@@ -135,9 +136,9 @@ def connected_components_blocked(
     Returns (node, component) with component = min node id in the
     cluster, identical to :func:`connected_components` on any input
     meeting the precondition."""
-    import pandas as pd
+    import pyarrow as pa
 
-    def per_block(pdf: pd.DataFrame) -> pd.DataFrame:
+    def per_block(tbl: pa.Table) -> pa.Table:
         parent: dict[int, int] = {}
 
         def find(x: int) -> int:
@@ -148,21 +149,25 @@ def connected_components_blocked(
                 parent[x], x = root, parent[x]
             return root
 
-        for a, b in zip(pdf[src], pdf[dst]):
-            ra, rb = find(int(a)), find(int(b))
+        us, vs = tbl.column(src).to_pylist(), tbl.column(dst).to_pylist()
+        for a, b in zip(us, vs):
+            ra, rb = find(a), find(b)
             if ra != rb:
                 # union by MIN id so the root IS the component label
                 lo, hi = (ra, rb) if ra < rb else (rb, ra)
                 parent[hi] = lo
-        nodes = sorted(set(pdf[src].astype("int64")) | set(pdf[dst].astype("int64")))
-        return pd.DataFrame(
-            {"node": nodes, "component": [find(n) for n in nodes]}
+        nodes = sorted(set(us) | set(vs))
+        return pa.table(
+            {
+                "node": pa.array(nodes, pa.int64()),
+                "component": pa.array([find(n) for n in nodes], pa.int64()),
+            }
         )
 
     return (
         edges.select(F.col(block_col).alias("_blk"), src, dst)
         .groupBy("_blk")
-        .applyInPandas(per_block, "node long, component long")
+        .applyInArrow(per_block, "node long, component long")
     )
 
 

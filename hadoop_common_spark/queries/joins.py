@@ -286,25 +286,25 @@ def entity_link_fuzzy_ids(spark: SparkSession, sf_dir: str) -> DataFrame:
     blocking that makes linkage linear in input + matches. Candidate
     dedup BEFORE the verify keeps the (cheap but per-pair) levenshtein
     off duplicate key collisions."""
-    from hadoop_common_spark.operators.dedup import deletion1_keys
+    from hadoop_common_spark.operators.dedup import deletion1_keys_sparksql as d1
 
-    c = spark.table("customer").select(
-        F.col("c_custkey").alias("custkey"),
-        F.substring(F.col("c_name"), 10, 9).alias("_ca"),
-        F.explode(deletion1_keys(F.substring(F.col("c_name"), 10, 9))).alias("_k"),
+    c = spark.table("customer").selectExpr(
+        "c_custkey AS custkey",
+        "substring(c_name, 10, 9) AS _ca",
+        f"explode({d1('substring(c_name, 10, 9)')}) AS _k",
     )
-    s = spark.table("supplier").select(
-        F.col("s_suppkey").alias("suppkey"),
-        F.substring(F.col("s_name"), 10, 9).alias("_cb"),
-        F.explode(deletion1_keys(F.substring(F.col("s_name"), 10, 9))).alias("_k"),
+    s = spark.table("supplier").selectExpr(
+        "s_suppkey AS suppkey",
+        "substring(s_name, 10, 9) AS _cb",
+        f"explode({d1('substring(s_name, 10, 9)')}) AS _k",
     )
     return (
         c.join(s, "_k")
-        .select("custkey", "suppkey", "_ca", "_cb")
+        .selectExpr("custkey", "suppkey", "_ca", "_cb")
         .distinct()
-        .withColumn("edit_dist", F.levenshtein("_ca", "_cb"))
-        .filter(F.col("edit_dist") <= 1)
-        .select("custkey", "suppkey", F.col("edit_dist").cast("int").alias("edit_dist"))
+        .withColumn("edit_dist", F.expr("levenshtein(_ca, _cb)"))
+        .filter("edit_dist <= 1")
+        .selectExpr("custkey", "suppkey", "CAST(edit_dist AS INT) AS edit_dist")
     )
 
 
@@ -569,33 +569,38 @@ def entity_link_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     step already produces, so it is bounded exactly as that list is.
     The final rollup aggregates one row per node. The oracle computes
     the same fixpoint with a recursive CTE."""
-    from hadoop_common_spark.operators.dedup import deletion1_keys
+    from hadoop_common_spark.operators.dedup import deletion1_keys_sparksql as d1
     from hadoop_common_spark.operators.graph import connected_components_blocked
 
-    c = spark.table("customer").select(
-        (F.col("c_custkey") * 2).alias("u"),
-        F.col("c_nationkey").alias("_nk"),
-        F.substring(F.col("c_name"), 10, 9).alias("_ca"),
-        F.explode(deletion1_keys(F.substring(F.col("c_name"), 10, 9))).alias("_k"),
+    c = spark.table("customer").selectExpr(
+        "c_custkey * 2 AS u",
+        "c_nationkey AS _nk",
+        "substring(c_name, 10, 9) AS _ca",
+        f"explode({d1('substring(c_name, 10, 9)')}) AS _k",
     )
-    s = spark.table("supplier").select(
-        (F.col("s_suppkey") * 2 + 1).alias("v"),
-        F.col("s_nationkey").alias("_nk"),
-        F.substring(F.col("s_name"), 10, 9).alias("_cb"),
-        F.explode(deletion1_keys(F.substring(F.col("s_name"), 10, 9))).alias("_k"),
+    s = spark.table("supplier").selectExpr(
+        "s_suppkey * 2 + 1 AS v",
+        "s_nationkey AS _nk",
+        "substring(s_name, 10, 9) AS _cb",
+        f"explode({d1('substring(s_name, 10, 9)')}) AS _k",
     )
     pairs = (
         c.join(s, ["_k", "_nk"])
-        .select("u", "v", "_nk", "_ca", "_cb")
+        .selectExpr("u", "v", "_nk", "_ca", "_cb")
         .distinct()
-        .filter(F.levenshtein("_ca", "_cb") <= 1)
-        .select("u", "v", "_nk")
+        .filter("levenshtein(_ca, _cb) <= 1")
+        .selectExpr("u", "v", "_nk")
     )
     comp = connected_components_blocked(pairs, "u", "v", "_nk")
-    return comp.groupBy(F.col("component").alias("cluster_id")).agg(
-        F.count(F.lit(1)).cast("bigint").alias("n_members"),
-        F.sum((F.col("node") % 2 == 0).cast("int")).cast("bigint").alias("n_customers"),
-        F.sum((F.col("node") % 2 == 1).cast("int")).cast("bigint").alias("n_suppliers"),
+    return comp.groupBy(F.expr("component AS cluster_id")).agg(
+        *map(
+            F.expr,
+            (
+                "CAST(count(1) AS BIGINT) AS n_members",
+                "CAST(sum(CAST(node % 2 = 0 AS INT)) AS BIGINT) AS n_customers",
+                "CAST(sum(CAST(node % 2 = 1 AS INT)) AS BIGINT) AS n_suppliers",
+            ),
+        )
     )
 
 

@@ -121,6 +121,16 @@ def get_spark(app_name: str = "hadoop_common_spark", shuffle_partitions: int | N
     memory sizing come from the environment (spark-submit), and
     ``spark.sql.shuffle.partitions`` should scale with total cores
     (AQE coalesces down when partitions are small).
+
+    On the ``local[cpus]`` master it picks itself, Python workers start
+    from ``hadoop_common_spark._pyworker`` (``spark.python.daemon.module``,
+    with this checkout on the workers' ``PYTHONPATH``). Cause: PySpark
+    calls ``importlib.invalidate_caches()`` at each task start, and
+    before Python 3.13 every cached ``zipimporter`` then eagerly re-reads
+    its archive's central directory — 160-230 ms per Python task
+    (4 cores, Python 3.11).
+    The daemon re-reads an archive only when its mtime or size changed.
+    A master from ``SPARK_MASTER``/``MASTER`` keeps the stock daemon.
     """
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 4))
     if shuffle_partitions is None:
@@ -163,6 +173,12 @@ def get_spark(app_name: str = "hadoop_common_spark", shuffle_partitions: int | N
     )
     if not os.environ.get("SPARK_MASTER") and "local" not in os.environ.get("MASTER", ""):
         builder = builder.master(f"local[{cpus}]")
+        # the zipimport-patched worker daemon (see the docstring); only
+        # here, where the workers are local and see this checkout
+        pkg_root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+        builder = builder.config(
+            "spark.python.daemon.module", "hadoop_common_spark._pyworker"
+        ).config("spark.executorEnv.PYTHONPATH", pkg_root)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return configure_for_scale(spark)

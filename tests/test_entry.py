@@ -115,3 +115,57 @@ def test_dataframe_debugging_off_errors_still_raise(spark):
     finally:
         spark.conf.set("spark.sql.ansi.enabled", prev)
     assert err.value.getCondition() == "DIVIDE_BY_ZERO"
+
+
+def _count_view_registrations(spark, monkeypatch) -> list[str]:
+    """Names passed to ``createOrReplaceTempView`` from now on."""
+    calls: list[str] = []
+    cls = type(spark.range(1))
+    orig = cls.createOrReplaceTempView
+
+    def counted(self, name):
+        calls.append(name)
+        return orig(self, name)
+
+    monkeypatch.setattr(cls, "createOrReplaceTempView", counted)
+    return calls
+
+
+def test_register_views_memo_hit_registers_nothing(spark, sf_dir, monkeypatch):
+    """A memo hit whose views still resolve to the pinned relations runs
+    no CreateViewCommand at all."""
+    from hadoop_common_spark.tables import register_views
+
+    register_views(spark, sf_dir)
+    calls = _count_view_registrations(spark, monkeypatch)
+    register_views(spark, sf_dir)
+    register_views(spark, sf_dir)
+    assert calls == []
+    assert spark.table("region").count() == 5
+
+
+def test_register_views_restores_out_of_band_views(spark, sf_dir, monkeypatch):
+    """A view re-pointed the way test_differential_fuzz does it (a plain
+    parquet read registered under the same name), or dropped, is restored
+    by the next call — and only that view is re-registered. force=True
+    still re-pins every view."""
+    from hadoop_common_spark.tables import register_views
+
+    tables = register_views(spark, sf_dir)
+    spark.range(3).createOrReplaceTempView("region")
+    spark.read.parquet(f"{sf_dir}/events.parquet").createOrReplaceTempView("events")
+    spark.catalog.dropTempView("nation")
+    calls = _count_view_registrations(spark, monkeypatch)
+    assert register_views(spark, sf_dir) is tables
+    assert sorted(calls) == ["events", "nation", "region"]
+    assert spark.table("region").columns == tables["region"].columns
+    assert spark.table("region").count() == 5
+    assert spark.table("nation").count() == 25
+    assert dict(spark.table("events").dtypes)["ts"] == "timestamp"
+
+    del calls[:]
+    register_views(spark, sf_dir, force=True)
+    assert sorted(calls) == sorted(tables)
+    del calls[:]
+    register_views(spark, sf_dir)
+    assert calls == []

@@ -81,7 +81,7 @@ def test_deletion1_keys_column_matches_python(spark):
     df = spark.createDataFrame([(w,) for w in words], "w string")
     got = {
         r.w: set(r.k)
-        for r in df.select("w", deletion1_keys(F.col("w")).alias("k")).collect()
+        for r in df.select("w", deletion1_keys("w").alias("k")).collect()
     }
     assert got == {w: _del1_keys(w) for w in words}
 

@@ -666,5 +666,35 @@ def test_entity_link_clusters_build_runs_no_jobs(spark, sf_dir, registry):
         sc.setLocalProperty("spark.jobGroup.id", None)
         sc.setLocalProperty("spark.job.description", None)
     assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
-    assert "FlatMapGroupsInPandas" in plan
+    assert "FlatMapGroupsInArrow" in plan
     assert "Scan ExistingRDD" not in plan
+
+
+@pytest.mark.parametrize(
+    "name, ceiling", [("dedup_minhash_lsh", 300), ("entity_link_clusters", 220)]
+)
+def test_build_py4j_call_ceiling(spark, sf_dir, registry, monkeypatch, name, ceiling):
+    """The two widest driver-side builds emit their expression fans as
+    Spark SQL text (one py4j call per expression, not per node). Counted
+    at GatewayClient.send_command on a warm second build: 207 and 161
+    calls at sf0.001, against 950 and 423 with Column trees. Only this
+    thread's calls count: py4j's finalizer thread sends a release call
+    for every freed JavaObject whenever it gets to them."""
+    import threading
+
+    import py4j.java_gateway as jg
+
+    registry[name].fn(spark, sf_dir)  # views registered, classes loaded
+    calls = 0
+    me = threading.get_ident()
+    send = jg.GatewayClient.send_command
+
+    def counted(self, *args, **kwargs):
+        nonlocal calls
+        calls += threading.get_ident() == me
+        return send(self, *args, **kwargs)
+
+    monkeypatch.setattr(jg.GatewayClient, "send_command", counted)
+    registry[name].fn(spark, sf_dir)
+    monkeypatch.undo()
+    assert calls <= ceiling, f"{name}: {calls} py4j calls"
