@@ -20,13 +20,17 @@ import hashlib
 import json
 import os
 import re
+import shutil
 import sys
+import tempfile
 import time
 from functools import partial
 from typing import Any, Callable, NamedTuple
 
 REPO_DIR = os.path.dirname(os.path.abspath(__file__))
 sys.path.insert(0, REPO_DIR)
+
+from perfbench import trace  # noqa: E402
 
 # One representative per operator family (SURVEY.md §2) — broad enough to
 # expose a regression anywhere, small enough to finish in minutes at sf0.1.
@@ -356,7 +360,7 @@ def build_tpch_scale_dir(
     })
 
 
-def bench_skew(spark, scale_dir: str, fingerprints: dict[str, str]) -> dict[str, float]:
+def bench_skew(spark, scale_dir: str, runs: dict[str, dict]) -> dict[str, float]:
     """Zipf-skew stress fixture (VERDICT r7 #3): 90% of the tier's
     events collapse onto ONE user (the one-user>>all-others regime the
     RehashPartitioner analog exists for) and the plain vs skew-proof
@@ -385,7 +389,8 @@ def bench_skew(spark, scale_dir: str, fingerprints: dict[str, str]) -> dict[str,
       archive).
 
     Timings land in BENCH_DETAIL as "skew_queries" (keep-min of 2, like
-    the deep tiers), plan fingerprints under "skew/<row>"."""
+    the deep tiers), plan fingerprints under "skew/<row>" and run
+    profiles under "skew/<row>#<run>"."""
     from pyspark.sql import Window
     from pyspark.sql import functions as F
 
@@ -409,9 +414,7 @@ def bench_skew(spark, scale_dir: str, fingerprints: dict[str, str]) -> dict[str,
     out: dict[str, float] = {}
 
     def timed(name, thunk):
-        out[name], fp = _time_query(spark, lambda _s, _d: thunk(), scale_dir, 2, f"skew/{name}")
-        if fp:
-            fingerprints[f"skew/{name}"] = fp
+        out[name] = _time_query(spark, lambda _s, _d: thunk(), scale_dir, 2, f"skew/{name}", runs)
 
     k = 5
     order = [F.col("value").desc(), F.col("event_id").asc()]
@@ -500,8 +503,6 @@ def _replicate_dir(spark, sf_dir: str, name: str, replicas: int, remaps: dict) -
     ``replicas`` times with its {column: Column-over-replica-index-``_r``}
     rewrites, every other base table symlinked. Rebuilt per run (cheap)
     so a regenerated base testdata can never serve a stale tier."""
-    import shutil
-
     from pyspark.sql import functions as F
 
     from hadoop_common_spark.tables import TABLE_NAMES, load_tables
@@ -568,8 +569,6 @@ def bench_dfsio(spark, n_rows: int) -> dict:
     100-byte records through the parquet file format (the reference
     measures raw HDFS streams; the engine's unit of IO is the columnar
     container). Reports seconds and MB/s for each direction."""
-    import shutil
-
     from pyspark.sql import functions as F
 
     out = "/tmp/hcs_bench_dfsio"
@@ -627,18 +626,28 @@ def _current_round() -> int:
     return rounds[-1][0] + 1 if rounds else 1
 
 
-def _prev_round_baseline(sf: float) -> tuple[str | None, dict]:
+def _read_json(path: str) -> dict:
+    try:
+        with open(path) as f:
+            return json.load(f)
+    except (OSError, ValueError):
+        return {}
+
+
+def _prev_round_baseline(sf: float, cpus: int | None = None) -> tuple[str | None, dict]:
     """The previous ROUND's detail record (not the previous run of this
     round — VERDICT r4 "What's wrong" #1): the newest archived
     BENCH_DETAIL_r{N}.json with N < current round and a per-query map at
-    the same sf. Returns (label, detail) or (None, {})."""
+    the same sf. With ``cpus`` (a bounded run) it is the previous run at
+    that core count, BENCH_DETAIL_c{cpus}.json, or nothing: the round
+    archives ran on another core count. Returns (label, detail) or
+    (None, {})."""
     cur = _current_round()
-    for n, p in reversed(_numbered("BENCH_DETAIL_r")):
-        try:
-            with open(p) as f:
-                d = json.load(f)
-        except (OSError, ValueError):
-            continue
+    archives = reversed(_numbered("BENCH_DETAIL_r"))
+    if cpus is not None:
+        archives = [(0, os.path.join(REPO_DIR, f"BENCH_DETAIL_c{cpus}.json"))]
+    for n, p in archives:
+        d = _read_json(p)
         if n < cur and d.get("queries") and d.get("sf") in (None, sf):
             return os.path.basename(p), d
     return None, {}
@@ -650,7 +659,11 @@ def _prev_round_baseline(sf: float) -> tuple[str | None, dict]:
 # does. Three per-session counters differ between two builds of the SAME
 # plan and are stripped before hashing: expression ids (`l_orderkey#123L`),
 # exchange ids (`[plan_id=45]`) and lambda variables (`lambda x_22`).
+# A scan's `DataFilters` value longer than 100 chars is cut by Spark
+# while the ids are still in it, so the cut falls elsewhere in each
+# build; an abbreviated value (it ends in `...`) is dropped whole.
 _PLAN_NOISE = (
+    (re.compile(r"(DataFilters: )(?:(?!, Format: ).)*\.\.\.(?=, Format: )"), r"\1..."),
     (re.compile(r"#\d+L?"), ""),
     (re.compile(r"plan_id=\d+"), "plan_id="),
     (re.compile(r"\b(lambda \w+?)_\d+\b"), r"\1"),
@@ -671,29 +684,51 @@ def plan_fingerprint(df) -> str:
     return hashlib.sha256(normalize_plan(_plan(df)).encode()).hexdigest()[:16]
 
 
-GATE_RATIO = 1.5
+# ---- work counters: what each timed run made Spark do, summed from the
+# event log over the jobs tagged with the run's description. A counter
+# moves when it is more than WORK_SLACK of the baseline's value (of 1,
+# below 1) away: compressed shuffle blocks vary a little with the order
+# rows arrive in, and AQE sometimes runs one more 1-task job for a
+# reused exchange (text_pmi_pairs at 10x: 8 jobs in 4 of 5 runs, 7 in 1).
+WORK = ("jobs", "stages", "tasks", "shuffle_read_mb", "shuffle_write_mb", "spill_mb")
+WORK_SLACK = 0.25
+_PROFILE_KEYS = (*WORK, "executor_cpu_s", "gc_s", "peak_exec_mem_mb", "task_skew")
+
+
+def _work_moved(now: dict, old: dict) -> list[str]:
+    """The work counters of one run that moved from ``old`` to ``now``."""
+    return [
+        k for k in WORK
+        if abs(now.get(k, 0) - old.get(k, 0)) > WORK_SLACK * max(old.get(k, 0), 1.0)
+    ]
 
 
 def _regressions(
     cur: dict[str, float], prev: dict[str, float], fingerprints: dict[str, str],
-    prev_fingerprints: dict[str, str], base: str | None, prefix: str = "",
+    prev_fingerprints: dict[str, str], profile: dict[str, dict], prev_profile: dict[str, dict],
+    base: str | None, prefix: str = "",
 ) -> dict[str, dict]:
     """Rows whose plan fingerprint (keyed ``prefix + name``) changed vs
-    the previous archive (``fired: "plan"``), whose raw wall time is above
-    GATE_RATIO × the archived one (``"time"``), or both (``"plan+time"``).
-    No host normalization: a ``"time"``-only flag says on its face that
-    the plan did not change. Rows without a positive baseline or with an
-    errored (-1) timing never flag."""
+    the archive ``base`` (``fired: "plan"``), whose work counters moved
+    in a run profiled on both sides (``"work"``, keyed
+    ``prefix + name + "#<run>"``), or both (``"plan+work"``). The raw
+    time ratio ``norm`` is reported, never gated: wall time moves with
+    the host. Rows without a positive baseline or with an errored (-1)
+    timing never flag."""
     out: dict[str, dict] = {}
     for name, now in cur.items():
         old = prev.get(name)
         if old is None or old <= 0 or now <= 0:
             continue
         fp, prev_fp = fingerprints.get(prefix + name), prev_fingerprints.get(prefix + name)
-        hits = (("plan", fp and prev_fp and fp != prev_fp), ("time", now / old > GATE_RATIO))
+        both = [k for k in profile if k.rpartition("#")[0] == prefix + name and k in prev_profile]
+        moved = sorted({m for k in both for m in _work_moved(profile[k], prev_profile[k])})
+        hits = (("plan", fp and prev_fp and fp != prev_fp), ("work", moved))
         fired = "+".join(tag for tag, hit in hits if hit)
         if fired:
             out[name] = {"prev": old, "now": now, "norm": round(now / old, 2), "fired": fired, "base": base}
+            if moved:
+                out[name]["moved"] = moved
     return out
 
 
@@ -711,8 +746,8 @@ def _tpch_plan_sentinels(spark, registry, tpch_dir: str) -> None:
     30x-replicated orders at ~54-64 MB, so the strategy flips run-to-run
     with parquet compression jitter (r10 saw Q18 broadcast + Q9 SMJ; r11
     saw both broadcast) — and the SMJ form of the SAME joins is pinned at
-    100x by tools/tpch100_study.py (r9: Q9 1 SMJ + 3 broadcasts, Q18 1
-    SMJ + 1, spill-exercised), so boundary-at-30x / SMJ-at-100x is the
+    100x by the one-shot depth studies in BENCH_NOTES (r9 and r11: Q9 1
+    SMJ + 3 broadcasts, Q18 1 SMJ + 1), so boundary-at-30x / SMJ-at-100x is the
     EXPECTED pair. What must hold for them HERE is the heavy leg: the
     over-lineitem shuffle aggregate (an Exchange hashpartitioning in the
     plan). Q5 keeps the strict shuffle-join requirement — its lineitem x
@@ -855,40 +890,60 @@ INLINE_QUERIES: list[tuple[str, str]] = [
 ]
 
 
-def _time_query(spark, fn, data_dir: str, repeats: int, label: str) -> tuple[float, str | None]:
+def _time_query(spark, fn, data_dir: str, repeats: int, label: str, runs: dict[str, dict]) -> float:
     """Keep-min seconds of ``repeats`` noop-sink runs (-1.0 if the first
-    errors — a broken query must not hide the others) and the plan
-    fingerprint, taken after the first run, outside the timed region."""
+    errors or its plan cannot be read — a broken query must not hide the
+    others). Run ``i``'s jobs carry the description ``<label>#<i>``; its
+    build and execution seconds go to ``runs`` under that key, with the
+    plan fingerprint taken after the first run, outside the timed region."""
+    sc = spark.sparkContext
     best, fp = -1.0, None
-    for _ in range(repeats):
+    for i in range(repeats):
+        sc.setJobDescription(f"{label}#{i}")
         t0 = time.perf_counter()
         try:
             df = fn(spark, data_dir)
+            t1 = time.perf_counter()
             _run_noop(df)
+            t2 = time.perf_counter()
+            fp = fp or plan_fingerprint(df)
         except Exception as e:
             print(f"# bench error {label}: {type(e).__name__}: {e}", file=sys.stderr)
             break
-        el = round(time.perf_counter() - t0, 3)
+        finally:
+            sc.setJobDescription(None)
+        el = round(t2 - t0, 3)
         best = el if best < 0 else min(best, el)
-        if fp is None:
-            try:
-                fp = plan_fingerprint(df)
-            except Exception as e:
-                print(f"# bench fingerprint error {label}: {type(e).__name__}: {e}", file=sys.stderr)
+        runs[f"{label}#{i}"] = {"build_s": round(t1 - t0, 3), "exec_s": round(t2 - t1, 3), "fingerprint": fp}
         # promptly release the run's DataFrame lineage (any cached or
         # checkpointed blocks) before the next run — at the 100x tier a
         # leaked copy is gigabytes
         del df
         gc.collect()
-    return best, fp
+    return best
+
+
+def read_profile(log_dir: str, runs: dict[str, dict]) -> dict[str, dict]:
+    """One record per timed run in ``runs``: its seconds and fingerprint,
+    and what its tagged jobs did, from the finished event log in
+    ``log_dir`` (``perfbench.trace``)."""
+    events, _scans = trace.read_event_log(trace.find_event_log(log_dir))
+    out = {}
+    for desc, run in runs.items():
+        t = events.get(desc, {})
+        out[desc] = {k: round(t.get(k, 0), 3) for k in _PROFILE_KEYS} | run
+        out[desc].update((k, int(t.get(k, 0))) for k in ("jobs", "stages", "tasks"))
+    return out
 
 
 def build_detail(
     sf: float, timings: dict[str, dict[str, float]], skew_timings: dict[str, float],
     dfsio: dict, fingerprints: dict[str, str], prev_label: str | None, prev: dict,
+    profile: dict[str, dict], prev_profile: dict[str, dict],
 ) -> dict:
     """The BENCH_DETAIL record: per-tier seconds and totals (``timings``
-    keyed by tier prefix), fingerprints, and flags vs the archive ``prev``."""
+    keyed by tier prefix), fingerprints, and flags vs the archive ``prev``
+    and the run profile ``prev_profile``."""
     prev_fp, prev_skew = prev.get("fingerprints") or {}, prev.get("skew_queries") or {}
     prev_w, w = (prev.get("dfsio") or {}).get("write_mb_s"), dfsio.get("write_mb_s")
     # reported, never divided into a ratio: the DFSIO write rate vs the
@@ -907,10 +962,11 @@ def build_detail(
         detail[tier.key("queries")] = t
         detail[tier.key("total")] = round(sum(v for v in t.values() if v >= 0), 3)
         vs_prev[tier.key("regressions")] = _regressions(
-            t, prev.get(tier.key("queries")) or {}, fingerprints, prev_fp, prev_label, tier.prefix
+            t, prev.get(tier.key("queries")) or {}, fingerprints, prev_fp,
+            profile, prev_profile, prev_label, tier.prefix,
         )
     vs_prev["skew_regressions"] = _regressions(
-        skew_timings, prev_skew, fingerprints, prev_fp, prev_label, "skew/"
+        skew_timings, prev_skew, fingerprints, prev_fp, profile, prev_profile, prev_label, "skew/"
     )
     # Full round-over-round ratios for the small skew tier (VERDICT r10
     # #3): record every raw ratio, not only the flags, so the archive
@@ -971,7 +1027,8 @@ def stdout_line(detail: dict, cpus: int, bounded: bool) -> str:
         "norm_headline_cpu": None,
         "vs_round": vs["prev_round"],
         "host_slowdown": vs["host_slowdown"],
-        # bounded: flags vs 32-core archives are not regressions
+        # a bounded run is a core-count scaling measurement: its flags
+        # stay in BENCH_DETAIL_c{cpus}.json, off the round's line
         "regressions": {} if bounded else {
             k: {"norm": v["norm"], "fired": v["fired"], "base": v["base"]}
             for k, v in list(flags.items())[:8]
@@ -1010,11 +1067,15 @@ def main() -> None:
     # REDUCED core count to measure per-query scaling, and the full run
     # blew its budget at 8 cores (BENCH_r12_c8.json: rc 124). At <=8
     # cores the run drops what a scaling measurement doesn't need: the
-    # 100x tier, the skew fixture and the keep-min repeats. Its flags
-    # would be against 32-core archives, so the stdout line carries none,
-    # and it writes BENCH_DETAIL_c{cpus}.json, never a round archive.
+    # 100x tier, the skew fixture and the keep-min repeats. It is flagged
+    # against the previous BENCH_DETAIL_c{cpus}.json, which it then
+    # overwrites; the stdout line carries no flags and no round archive
+    # is written.
     bounded = cpus <= 8
 
+    # the event log is where every run's work counters come from
+    log_dir = tempfile.mkdtemp(prefix="hcs_bench_eventlog_")
+    os.environ["PYSPARK_SUBMIT_ARGS"] = " ".join([*trace.event_log_conf(log_dir), "pyspark-shell"])
     registry = load_all()
     spark = get_spark("bench")
 
@@ -1029,7 +1090,7 @@ def main() -> None:
     # per tier prefix: {query: seconds} and the tier's data dir
     timings: dict[str, dict[str, float]] = {}
     dirs: dict[str, str] = {}
-    fingerprints: dict[str, str] = {}
+    runs: dict[str, dict] = {}
     dfsio: dict = {}
     for tier in TIERS:
         if bounded and tier.skip_bounded:
@@ -1044,11 +1105,8 @@ def main() -> None:
             if tier.check:
                 tier.check(spark, registry, data_dir)
             for name in (n for n in tier.queries if n in fns):
-                label = tier.prefix + name
                 reps = 1 if bounded else tier.repeats
-                out[name], fp = _time_query(spark, fns[name], data_dir, reps, label)
-                if fp:
-                    fingerprints[label] = fp
+                out[name] = _time_query(spark, fns[name], data_dir, reps, tier.prefix + name, runs)
         except Exception as e:
             print(f"# bench error {tier.prefix or 'headline/'} tier: {type(e).__name__}: {e}", file=sys.stderr)
         if not tier.prefix:
@@ -1069,12 +1127,22 @@ def main() -> None:
     skew_base = dirs.get("scale100/") or dirs.get("scale/")
     if skew_base is not None and not bounded:
         try:
-            skew_timings = bench_skew(spark, skew_base, fingerprints)
+            skew_timings = bench_skew(spark, skew_base, runs)
         except Exception as e:
             print(f"# bench error skew tier: {type(e).__name__}: {e}", file=sys.stderr)
 
-    prev_label, prev = _prev_round_baseline(sf)
-    detail = build_detail(sf, timings, skew_timings, dfsio, fingerprints, prev_label, prev)
+    spark.stop()  # finishes the event log
+    profile = read_profile(log_dir, runs)
+    shutil.rmtree(log_dir, ignore_errors=True)
+    fingerprints = {k.rpartition("#")[0]: r["fingerprint"] for k, r in runs.items() if r["fingerprint"]}
+    prev_label, prev = _prev_round_baseline(sf, cpus if bounded else None)
+    # the previous profile comes from this core count by its name
+    profile_path = os.path.join(REPO_DIR, f"PROFILE_c{cpus}.json")
+    prev_profile = _read_json(profile_path)
+    prev_runs = prev_profile.get("runs", {}) if prev_profile.get("sf") == sf else {}
+    detail = build_detail(
+        sf, timings, skew_timings, dfsio, fingerprints, prev_label, prev, profile, prev_runs
+    )
     # Full per-query timings go to a repo file. BENCH_DETAIL.json is the
     # working copy; BENCH_DETAIL_r{N}.json is the per-round archive the
     # NEXT round diffs against (VERDICT r4 #1 — the working file alone is
@@ -1087,8 +1155,9 @@ def main() -> None:
     for fname in names:
         with open(os.path.join(REPO_DIR, fname), "w") as f:
             json.dump(detail, f, indent=1, sort_keys=True)
+    with open(profile_path, "w") as f:
+        json.dump({"cpus": cpus, "sf": sf, "runs": profile}, f, indent=1, sort_keys=True)
     print(stdout_line(detail, cpus, bounded))
-    spark.stop()
 
 
 if __name__ == "__main__":

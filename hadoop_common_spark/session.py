@@ -329,6 +329,9 @@ def get_spark(app_name: str = "hadoop_common_spark", shuffle_partitions: int | N
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
         .config("spark.driver.memory", driver_mem)
         .config("spark.ui.enabled", "false")
+        # the bar writes to stderr without a newline, so it breaks lines
+        # of any log that takes both streams
+        .config("spark.ui.showConsoleProgress", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         # DataFrame call-site capture off: with it on, every F.* / Column
         # call is wrapped to record its Python call site, which costs ~5

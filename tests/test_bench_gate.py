@@ -1,25 +1,28 @@
 """Unit pins for the bench regression gate and the stdout contract
-(pure functions in bench.py), plus one Spark check that the plan
-fingerprint is stable across builds and moves with the plan.
+(pure functions in bench.py), plus two Spark checks: the plan
+fingerprint is stable across builds and moves with the plan, and a
+timed run's profile read from the event log counts its work.
 
 The gate is measurement infrastructure, but it is DRIVER-FACING: its
 flags land verbatim in the archived BENCH_r{N}.json. It flags a row when
 its physical-plan fingerprint differs from the previous archive's
-("plan"), when its raw wall time is above 1.5x the archived one
-("time"), or both — a number the host cannot move next to one it can.
+("plan"), when its work counters moved against the previous
+PROFILE_c{cpus}.json ("work"), or both — numbers the host cannot move;
+the raw time ratio is reported only.
 Reference anchor: the SortValidator discipline
 (JCT/mapred/SortValidator.java:54) — validate the measurement, not
 just the output.
 
-Runtime on 4 cores: 16 s for the file, nearly all of it the Spark
-session and the four flagship plans of the fingerprint test; the pure
-tests take about one second."""
+Runtime on 4 cores: about 18 s for the file: the Spark session and the
+four flagship plans of the fingerprint test, and the profile test's own
+driver JVM (about 8 s); the pure tests take about one second."""
 
 from __future__ import annotations
 
 import importlib.util
 import json
 import os
+import subprocess
 import sys
 from types import SimpleNamespace
 
@@ -39,21 +42,27 @@ def bench():
 
 # Two builds of the same query in one session differ only in these
 # counters: expression ids (with and without the L suffix), exchange
-# plan ids, and the lambda-variable suffix of higher-order functions.
+# plan ids, and the lambda-variable suffix of higher-order functions;
+# and in where Spark cut a long DataFilters value, which it abbreviates
+# to 100 chars before the ids are stripped.
 _BUILD_1 = """AdaptiveSparkPlan isFinalPlan=false
 +- HashAggregate(keys=[n_name#12], functions=[sum(rev#40L)], output=[n_name#12, revenue#41L])
    +- Exchange hashpartitioning(n_name#12, 8), ENSURE_REQUIREMENTS, [plan_id=118]
       +- Project [transform(toks#7, lambdafunction(upper(lambda x_22#90), lambda x_22#90, false)) AS up#91]
          +- BroadcastHashJoin [o_custkey#3L], [c_custkey#5L], Inner, BuildRight, false
             :- Filter aggregate(v#8, 0, lambdafunction((lambda acc_3 + lambda y_4), lambda acc_3, lambda y_4, false))
-            +- BroadcastExchange HashedRelationBroadcastMode(List(input[0, bigint, false]),false), [plan_id=97]"""
+            +- BroadcastExchange HashedRelationBroadcastMode(List(input[0, bigint, false]),false), [plan_id=97]
+               +- FileScan parquet [l_quantity#72,l_orderkey#68L] Batched: true, DataFilters: [isnotnull(l_quantity#72), (l_quantity#72 <= 2.0), isnotnull(l_orderkey#68L), isnotnull(((l_su..., Format: Parquet, PushedFilters: [IsNotNull(l_quantity)]
+               +- FileScan parquet [o_orderkey#84L] Batched: true, DataFilters: [isnotnull(o_orderkey#84L)], Format: Parquet, PushedFilters: [IsNotNull(o_orderkey)]"""
 _BUILD_2 = """AdaptiveSparkPlan isFinalPlan=false
 +- HashAggregate(keys=[n_name#212], functions=[sum(rev#240L)], output=[n_name#212, revenue#241L])
    +- Exchange hashpartitioning(n_name#212, 8), ENSURE_REQUIREMENTS, [plan_id=1018]
       +- Project [transform(toks#207, lambdafunction(upper(lambda x_57#290), lambda x_57#290, false)) AS up#291]
          +- BroadcastHashJoin [o_custkey#203L], [c_custkey#205L], Inner, BuildRight, false
             :- Filter aggregate(v#208, 0, lambdafunction((lambda acc_31 + lambda y_32), lambda acc_31, lambda y_32, false))
-            +- BroadcastExchange HashedRelationBroadcastMode(List(input[0, bigint, false]),false), [plan_id=997]"""
+            +- BroadcastExchange HashedRelationBroadcastMode(List(input[0, bigint, false]),false), [plan_id=997]
+               +- FileScan parquet [l_quantity#10472,l_orderkey#10468L] Batched: true, DataFilters: [isnotnull(l_quantity#10472), (l_quantity#10472 <= 2.0), isnotnull(l_orderkey#10468L), isnotnull(..., Format: Parquet, PushedFilters: [IsNotNull(l_quantity)]
+               +- FileScan parquet [o_orderkey#10484L] Batched: true, DataFilters: [isnotnull(o_orderkey#10484L)], Format: Parquet, PushedFilters: [IsNotNull(o_orderkey)]"""
 
 
 def _fake_df(plan: str):
@@ -68,6 +77,8 @@ def test_normalizer_equates_two_builds_of_one_plan(bench):
     norm = bench.normalize_plan(_BUILD_1)
     assert "#" not in norm and "plan_id=]" in norm
     assert "lambda x," in norm and "lambda acc +" in norm and "x_22" not in norm
+    assert "DataFilters: ..., Format" in norm
+    assert "DataFilters: [isnotnull(o_orderkey)], Format" in norm
 
 
 def test_normalizer_keeps_an_operator_change_visible(bench):
@@ -77,54 +88,112 @@ def test_normalizer_keeps_an_operator_change_visible(bench):
     # suffix is stripped, not the body
     changed = _BUILD_1.replace("upper(lambda x_22#90)", "lower(lambda x_22#90)")
     assert bench.normalize_plan(changed) != bench.normalize_plan(_BUILD_1)
+    # a DataFilters value Spark did not abbreviate is kept whole
+    changed = _BUILD_1.replace("[isnotnull(o_orderkey#84L)]", "[isnotnull(o_custkey#85L)]")
+    assert bench.normalize_plan(changed) != bench.normalize_plan(_BUILD_1)
+
+
+def _work(tasks: int = 4, shuffle_mb: float = 4.0, **kw) -> dict:
+    """One run's profile record: work counters (and anything in ``kw``)."""
+    rec = {"jobs": 2, "stages": 3, "tasks": tasks, "shuffle_read_mb": shuffle_mb,
+           "shuffle_write_mb": shuffle_mb, "spill_mb": 0.0}
+    return rec | kw
+
+
+def _gate(bench, cur, prev, fps=None, prev_fps=None, work=None, prev_work=None,
+          base="BENCH_DETAIL_c4.json", prefix=""):
+    return bench._regressions(
+        cur, prev, fps or {}, prev_fps or {}, work or {}, prev_work or {}, base, prefix
+    )
 
 
 def test_gate_single_component_flags_are_labeled(bench):
-    """A plan change at an unchanged time fires "plan"; a slower row with
-    the same plan fires "time" — which says on its face that the plan
-    did not move."""
-    out = bench._regressions({"q": 1.0}, {"q": 1.0}, {"q": "new"}, {"q": "old"}, "BENCH_DETAIL_r13.json")
+    """A plan change with unmoved work fires "plan"; moved work under the
+    same plan fires "work" and names the counters that moved. The time
+    ratio is reported, not gated: 3x slower with the same plan and work
+    flags nothing."""
+    out = _gate(bench, {"q": 1.0}, {"q": 1.0}, {"q": "new"}, {"q": "old"},
+                {"q#0": _work()}, {"q#0": _work()})
     assert out["q"] == {
-        "prev": 1.0, "now": 1.0, "norm": 1.0, "fired": "plan", "base": "BENCH_DETAIL_r13.json",
+        "prev": 1.0, "now": 1.0, "norm": 1.0, "fired": "plan", "base": "BENCH_DETAIL_c4.json",
     }
-    out = bench._regressions({"q": 2.0}, {"q": 1.0}, {"q": "same"}, {"q": "same"}, "r13")
-    assert out["q"]["fired"] == "time" and out["q"]["norm"] == 2.0
+    out = _gate(bench, {"q": 1.0}, {"q": 1.0}, {"q": "same"}, {"q": "same"},
+                {"q#0": _work(tasks=8)}, {"q#0": _work()})
+    assert out["q"]["fired"] == "work" and out["q"]["moved"] == ["tasks"]
+    assert _gate(bench, {"q": 3.0}, {"q": 1.0}, {"q": "same"}, {"q": "same"},
+                 {"q#0": _work()}, {"q#0": _work()}) == {}
 
 
 def test_gate_fires_when_both_regress_and_names_components(bench):
-    out = bench._regressions({"q": 2.0}, {"q": 1.0}, {"q": "new"}, {"q": "old"}, "r13")
-    assert out["q"]["fired"] == "plan+time"
+    out = _gate(bench, {"q": 2.0}, {"q": 1.0}, {"q": "new"}, {"q": "old"},
+                {"q#0": _work(tasks=8, shuffle_mb=9.0)}, {"q#0": _work()})
+    assert out["q"]["fired"] == "plan+work"
+    assert out["q"]["moved"] == ["shuffle_read_mb", "shuffle_write_mb", "tasks"]
     assert out["q"]["norm"] == 2.0
 
 
 def test_gate_fingerprints_are_keyed_by_tier_prefix(bench):
     fps, prev_fps = {"scale/q": "new", "q": "same"}, {"scale/q": "old", "q": "same"}
-    assert bench._regressions({"q": 1.0}, {"q": 1.0}, fps, prev_fps, "r13") == {}
-    out = bench._regressions({"q": 1.0}, {"q": 1.0}, fps, prev_fps, "r13", "scale/")
+    assert _gate(bench, {"q": 1.0}, {"q": 1.0}, fps, prev_fps) == {}
+    out = _gate(bench, {"q": 1.0}, {"q": 1.0}, fps, prev_fps, prefix="scale/")
     assert out["q"]["fired"] == "plan"
+    work, prev_work = {"scale/q#0": _work(tasks=9), "q#0": _work()}, {"scale/q#0": _work(), "q#0": _work()}
+    assert _gate(bench, {"q": 1.0}, {"q": 1.0}, work=work, prev_work=prev_work) == {}
+    out = _gate(bench, {"q": 1.0}, {"q": 1.0}, work=work, prev_work=prev_work, prefix="scale/")
+    assert out["q"]["fired"] == "work"
+    # every run of a repeated row is compared, not only the first
+    work["scale/q#1"], prev_work["scale/q#1"] = _work(jobs=3), _work()
+    work["scale/q#0"] = _work()
+    assert _gate(bench, {"q": 1.0}, {"q": 1.0}, work=work, prev_work=prev_work,
+                 prefix="scale/")["q"]["moved"] == ["jobs"]
 
 
 def test_gate_skips_missing_and_errored_baselines(bench):
     """No baseline, zero baseline, or an errored (-1) current timing
     never flags, even when the plan changed; a fingerprint missing on
-    either side (an archive from before fingerprints) is no plan flag."""
+    either side (an archive from before fingerprints) is no plan flag.
+    Work is compared only for runs profiled on both sides: no previous
+    PROFILE_c{cpus}.json (a first run at this core count), a row new
+    since it, or a run the previous one did not make, never flags."""
     fps = {"new_q": "a", "err_q": "a", "zero_prev": "a", "no_prev_fp": "a"}
     prev_fps = {"new_q": "b", "err_q": "b", "zero_prev": "b"}
-    out = bench._regressions(
+    out = _gate(
+        bench,
         {"new_q": 50.0, "err_q": -1.0, "zero_prev": 1.0, "no_prev_fp": 1.0},
         {"err_q": 1.0, "zero_prev": 0.0, "no_prev_fp": 1.0},
-        fps, prev_fps, "r13",
+        fps, prev_fps,
     )
     assert out == {}
+    assert _gate(bench, {"q": 1.0}, {"q": 1.0}, work={"q#0": _work(tasks=99)}) == {}
+    assert _gate(bench, {"q": 1.0}, {"q": 1.0}, work={"q#1": _work(tasks=99)},
+                 prev_work={"q#0": _work()}) == {}
+    assert _gate(bench, {"q": 1.0}, {"q": 1.0}, work={"q#0": _work()},
+                 prev_work={"q#0": _work(tasks=99)}) != {}
 
 
-def test_gate_boundary_is_strictly_above_1_5(bench):
-    assert bench._regressions({"q": 1.5}, {"q": 1.0}, {}, {}, "r13") == {}
-    assert "q" in bench._regressions({"q": 1.51}, {"q": 1.0}, {}, {}, "r13")
+def test_work_flag_boundary_is_strictly_above_the_slack(bench):
+    """A count or a shuffle or spill volume flags only when it moves by
+    more than WORK_SLACK of the baseline (floored at 1), in either
+    direction: a count below 4 flags on any change."""
+    assert bench.WORK_SLACK == 0.25
+
+    def fired(now: dict, old: dict) -> bool:
+        return bool(_gate(bench, {"q": 1.0}, {"q": 1.0}, work={"q#0": now}, prev_work={"q#0": old}))
+
+    assert not fired(_work(shuffle_mb=5.0), _work(shuffle_mb=4.0))
+    assert fired(_work(shuffle_mb=5.01), _work(shuffle_mb=4.0))
+    assert not fired(_work(shuffle_mb=3.0), _work(shuffle_mb=4.0))
+    assert fired(_work(shuffle_mb=2.99), _work(shuffle_mb=4.0))
+    # below 1 MB the slack is a quarter of 1 MB
+    assert not fired(_work(spill_mb=0.25), _work())
+    assert fired(_work(spill_mb=0.26), _work())
+    assert not fired(_work(tasks=7), _work(tasks=8))
+    assert fired(_work(tasks=5), _work(tasks=8)) and fired(_work(tasks=11), _work(tasks=8))
+    assert fired(_work(jobs=3), _work(jobs=2)) and fired(_work(stages=2), _work(stages=3))
 
 
 def test_regression_record_names_comparison_base(bench):
-    out = bench._regressions({"q": 2.0}, {"q": 1.0}, {}, {}, "BENCH_DETAIL_r13.json")
+    out = _gate(bench, {"q": 2.0}, {"q": 1.0}, {"q": "a"}, {"q": "b"}, base="BENCH_DETAIL_r13.json")
     assert out["q"]["base"] == "BENCH_DETAIL_r13.json"
 
 
@@ -141,6 +210,14 @@ def test_prev_round_baseline_is_newest_archive_before_current_round(bench, tmp_p
     assert label == "BENCH_DETAIL_r11.json" and prev["queries"] == {"q": 11.0}
     assert bench._prev_round_baseline(0.01)[0] == "BENCH_DETAIL_r09.json"
     assert bench._prev_round_baseline(1.0) == (None, {})
+    # a bounded run compares with the last run at its own core count,
+    # never with a round archive from another
+    assert bench._prev_round_baseline(0.1, 4) == (None, {})
+    (tmp_path / "BENCH_DETAIL_c4.json").write_text(json.dumps({"sf": 0.1, "queries": {"q": 4.0}}))
+    (tmp_path / "BENCH_DETAIL_c8.json").write_text(json.dumps({"sf": 0.1, "queries": {"q": 8.0}}))
+    label, prev = bench._prev_round_baseline(0.1, 4)
+    assert label == "BENCH_DETAIL_c4.json" and prev["queries"] == {"q": 4.0}
+    assert bench._prev_round_baseline(0.01, 4) == (None, {})
 
 
 # The stdout line's top-level keys and the BENCH_DETAIL keys before the
@@ -169,7 +246,8 @@ _VS_PREV_KEYS = {
 
 def _synthetic_run(bench, slow: float):
     """Every tier timed (10-99 s per row, so inline timings are long),
-    and a previous archive ``slow`` times faster with other plans."""
+    and a previous archive ``slow`` times faster with other plans and
+    a previous profile with fewer tasks."""
     timings = {
         t.prefix: {q: 10.0 + (i % 90) + 0.123 for i, q in enumerate(t.queries)}
         for t in bench.TIERS
@@ -184,9 +262,11 @@ def _synthetic_run(bench, slow: float):
         sf=0.1, skew_queries={k: v / slow for k, v in skew.items()},
         dfsio={"write_mb_s": 150.0}, fingerprints={k: "0" * 16 for k in fps},
     )
+    work = {k + "#0": _work(tasks=8) for k in fps}
+    prev_work = {k + "#0": _work() for k in fps}
     return bench.build_detail(
         0.1, timings, skew, {"write_mb_s": 120.0, "read_mb_s": 900.0},
-        fps, "BENCH_DETAIL_r13.json", prev,
+        fps, "BENCH_DETAIL_r13.json", prev, work, prev_work,
     )
 
 
@@ -209,7 +289,7 @@ def test_stdout_line_contract(bench, cpus, bounded):
         assert parsed["regressions"] == {}
     else:
         assert len(parsed["regressions"]) == 8
-        assert {v["fired"] for v in parsed["regressions"].values()} == {"plan+time"}
+        assert {v["fired"] for v in parsed["regressions"].values()} == {"plan+work"}
 
 
 def test_inline_queries_name_real_bench_rows(bench):
@@ -242,3 +322,45 @@ def test_fingerprint_is_stable_across_builds_and_moves_with_the_plan(bench, spar
         spark.conf.set(key, old)
     assert no_broadcast != first
     assert bench.plan_fingerprint(fn(spark, sf_dir)) == first
+
+
+_PROFILE_RUN = """
+import json, os, sys
+sys.path.insert(0, sys.argv[1])
+import bench
+from perfbench import trace
+
+log_dir, sf_dir = sys.argv[2], sys.argv[3]
+os.environ["PYSPARK_SUBMIT_ARGS"] = " ".join([*trace.event_log_conf(log_dir), "pyspark-shell"])
+from hadoop_common_spark.queries import load_all
+from hadoop_common_spark.session import get_spark
+
+spark = get_spark("bench-profile-test")
+runs = {}
+fn = load_all()["pricing_summary"].fn
+bench._time_query(spark, fn, sf_dir, 1, "pricing_summary", runs)
+spark.stop()
+print(json.dumps(bench.read_profile(log_dir, runs)))
+"""
+
+
+def test_profile_of_a_timed_run_counts_its_work(bench, sf_dir, tmp_path):
+    """A timed run's jobs carry its description, and the event log read
+    back holds its work: a cheap sf0.001 query in its own driver JVM
+    (the event log must be on when the JVM starts) profiles nonzero
+    jobs, stages and tasks. About 8 s at 4 cores, nearly all of it the
+    JVM's start and stop."""
+    log_dir = tmp_path / "eventlog"
+    log_dir.mkdir()
+    env = dict(os.environ, SPARK_GRAFT_DRIVER_MEM="1g")
+    out = subprocess.run(
+        [sys.executable, "-c", _PROFILE_RUN, os.path.dirname(_BENCH), str(log_dir), sf_dir],
+        env=env, capture_output=True, text=True, timeout=300,
+    )
+    assert out.returncode == 0, out.stderr[-2000:]
+    profile = json.loads(out.stdout.strip().splitlines()[-1])
+    assert list(profile) == ["pricing_summary#0"]
+    rec = profile["pricing_summary#0"]
+    assert rec["jobs"] > 0 and rec["stages"] > 0 and rec["tasks"] > 0
+    assert rec["executor_cpu_s"] > 0 and rec["shuffle_write_mb"] > 0
+    assert len(rec["fingerprint"]) == 16 and rec["build_s"] >= 0 and rec["exec_s"] > 0

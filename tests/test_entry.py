@@ -117,6 +117,13 @@ def test_dataframe_debugging_off_errors_still_raise(spark):
     assert err.value.getCondition() == "DIVIDE_BY_ZERO"
 
 
+def test_console_progress_bar_is_off(spark):
+    """get_spark turns Spark's console progress bar off: it writes to
+    stderr without a newline, so in a log that takes both streams
+    (``2>&1``) a result line that follows it no longer starts a line."""
+    assert spark.sparkContext.getConf().get("spark.ui.showConsoleProgress") == "false"
+
+
 def _count_view_registrations(spark, monkeypatch) -> list[str]:
     """Names passed to ``createOrReplaceTempView`` from now on."""
     calls: list[str] = []

@@ -226,8 +226,9 @@ def test_salted_join_matches_plain_join(spark):
 
 
 def test_aqe_skew_join_split_engages(spark, tmp_path):
-    """VERDICT r9 #4, miniaturized from tools/aqe_skew_study.py (100x
-    fixture: 10.8s -> 1.5s, straggler task 10.1s -> 0.61s): Spark's
+    """VERDICT r9 #4, miniaturized from the r10 study of the bench skew
+    fixture's join at 100x (BENCH_NOTES, "r10: AQE skew-join split
+    validated"; 10.8s -> 1.5s, straggler task 10.1s -> 0.61s): Spark's
     OptimizeSkewedJoin — the runtime RehashPartitioner
     (MRC/mapreduce/lib/partition/RehashPartitioner.java:48) — must
     (a) SPLIT the hot partition of a 90%-skewed shuffle join when both
