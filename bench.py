@@ -1058,7 +1058,7 @@ def stdout_line(detail: dict, cpus: int, bounded: bool) -> str:
 def main() -> None:
     from hadoop_common_spark.queries import load_all
     from hadoop_common_spark.session import get_spark
-    from hadoop_common_spark.tables import DEFAULT_SF_DIR, load_tables
+    from hadoop_common_spark.tables import DEFAULT_SF_DIR, register_views
 
     sf_dir = DEFAULT_SF_DIR  # $SPARK_GRAFT_SF_DIR, else the sf0.1 testdata
     sf = float(os.path.basename(sf_dir.rstrip("/")).replace("sf", "") or 0)
@@ -1098,10 +1098,11 @@ def main() -> None:
         out = timings[tier.prefix] = {}
         try:
             data_dir = dirs[tier.prefix] = tier.build(spark, sf_dir)
-            if tier.warm:
-                tabs = load_tables(spark, data_dir)
-                for t in tier.warm:
-                    _run_noop(tabs[t])
+            # the tier's views, registered here so that their jobs are
+            # not charged to the tier's first timed row
+            tabs = register_views(spark, data_dir)
+            for t in tier.warm:
+                _run_noop(tabs[t])
             if tier.check:
                 tier.check(spark, registry, data_dir)
             for name in (n for n in tier.queries if n in fns):

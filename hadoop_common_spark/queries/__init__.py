@@ -367,11 +367,5 @@ def load_all() -> dict[str, QueryDef]:
     """Import every query module (idempotent) and return the registry
     in driver-facing priority order (see PRIORITY above)."""
     for mod in _QUERY_MODULES:
-        try:
-            importlib.import_module(mod)
-        except ModuleNotFoundError as e:
-            # Module not built yet (incremental rounds) — skip, don't fail
-            # the whole surface over one missing file.
-            if "hadoop_common_spark" not in str(e):
-                raise
+        importlib.import_module(mod)
     return _ordered(REGISTRY)

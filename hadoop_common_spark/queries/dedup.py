@@ -113,8 +113,9 @@ def dedup_exact_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     return exact_dedup(spark.table("events"), "props", "event_id")
 
 
-_SIMHASH_ORACLE = """
-WITH th AS (
+# Per-document 60 bit votes of the md5 token hashes (th -> votes): the
+# SimHash fingerprint both SimHash oracles fold.
+_SIMHASH_VOTES_CTES = """th AS (
   SELECT doc_id, ('0x' || substr(md5(tok), 1, 15))::BIGINT AS h
   FROM (SELECT doc_id, unnest(string_split_regex(text, '\\s+')) AS tok FROM documents)
   WHERE tok != ''
@@ -123,7 +124,10 @@ votes AS (
   SELECT doc_id, j, SUM(CASE WHEN (h >> j) & 1 = 1 THEN 1 ELSE -1 END) AS v
   FROM th, (SELECT unnest(generate_series(0, 59)) AS j) bits
   GROUP BY doc_id, j
-)
+)"""
+
+_SIMHASH_ORACLE = f"""
+WITH {_SIMHASH_VOTES_CTES}
 SELECT doc_id, CAST(SUM(CASE WHEN v > 0 THEN (1::BIGINT << j) ELSE 0 END) AS BIGINT) AS simhash
 FROM votes GROUP BY doc_id
 """
@@ -136,17 +140,8 @@ def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     return simhash(spark.table("documents"), "doc_id", "text", bits=60)
 
 
-_SIMHASH_FP_CTE = """
-th AS (
-  SELECT doc_id, ('0x' || substr(md5(tok), 1, 15))::BIGINT AS h
-  FROM (SELECT doc_id, unnest(string_split_regex(text, '\\s+')) AS tok FROM documents)
-  WHERE tok != ''
-),
-votes AS (
-  SELECT doc_id, j, SUM(CASE WHEN (h >> j) & 1 = 1 THEN 1 ELSE -1 END) AS v
-  FROM th, (SELECT unnest(generate_series(0, 59)) AS j) bits
-  GROUP BY doc_id, j
-),
+_SIMHASH_FP_CTE = f"""
+{_SIMHASH_VOTES_CTES},
 fp AS (
   SELECT doc_id, CAST(SUM(CASE WHEN v > 0 THEN (1::BIGINT << j) ELSE 0 END) AS BIGINT) AS simhash
   FROM votes GROUP BY doc_id
@@ -254,6 +249,23 @@ FROM (
 """
 
 
+def _band_candidates(docs: DataFrame) -> DataFrame:
+    """Spark side of _MINHASH_CTES' cand: distinct (id_a < id_b) pairs
+    sharing a MinHash band bucket (16 hashes, 4 bands)."""
+    from hadoop_common_spark.operators.dedup import lsh_band_keys, minhash_signature
+
+    sig = minhash_signature(docs, "doc_id", "text", num_hashes=NUM_HASHES)
+    bk = lsh_band_keys(sig, "doc_id", BANDS, ROWS)
+    a = bk.select(F.col("doc_id").alias("id_a"), "band", "band_key")
+    b = bk.select(F.col("doc_id").alias("id_b"), "band", "band_key")
+    return (
+        a.join(b, ["band", "band_key"])
+        .filter(F.col("id_a") < F.col("id_b"))
+        .select("id_a", "id_b")
+        .distinct()
+    )
+
+
 @query("dedup_minhash_recall_eval", oracle=_MINHASH_RECALL_ORACLE)
 def dedup_minhash_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Measured recall of the MinHash banding stage (16 hashes, 4 bands)
@@ -263,22 +275,10 @@ def dedup_minhash_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     are shuffle-bounded: ground truth is the sparse shingle join, the
     candidate stage is the banded bucket join — no all-pairs anywhere, so
     the evaluation runs at corpus scale, not just sample scale."""
-    from hadoop_common_spark.operators.dedup import lsh_band_keys, minhash_signature
-
     docs = spark.table("documents")
     gt = ngram_jaccard_pairs(docs, "doc_id", "text", "lang", threshold=0.2)
 
-    sig = minhash_signature(docs, "doc_id", "text", num_hashes=NUM_HASHES)
-    bk = lsh_band_keys(sig, "doc_id", BANDS, ROWS)
-    a = bk.select(F.col("doc_id").alias("id_a"), "band", "band_key")
-    b = bk.select(F.col("doc_id").alias("id_b"), "band", "band_key")
-    cand = (
-        a.join(b, ["band", "band_key"])
-        .filter(F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b")
-        .distinct()
-        .withColumn("hit", F.lit(1))
-    )
+    cand = _band_candidates(docs).withColumn("hit", F.lit(1))
     return (
         gt.withColumn("bin", F.floor(F.col("jaccard") * 10) / F.lit(10.0))
         .join(cand, ["id_a", "id_b"], "left")
@@ -683,14 +683,20 @@ def corpus_dedup_rate_by_source(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # Exact shared-substring spans (the suffix-array pipelines' exact-substring
 # dedup rule, relationally): positional 16-grams -> diagonal-run merge.
-_SHARED_SPAN_ORACLE = """
-WITH pg AS (
+# Positional 16-grams `pg` of each document (both span oracles' input).
+_SPAN_GRAMS_CTE = """WITH pg AS (
   SELECT lang, doc_id, i, substr(text, i, 16) AS g
   FROM documents, LATERAL (SELECT unnest(generate_series(1, greatest(length(text) - 15, 0))) AS i)
 ),
-m AS (
+"""
+
+
+def _span_runs_sql(grams: str) -> str:
+    """Gram matches m of the `grams` CTE, merged into diagonal runs r
+    and span lengths: the tail of both span oracles."""
+    return f"""m AS (
   SELECT a.doc_id AS id_a, b.doc_id AS id_b, a.i AS ia, b.i AS ib
-  FROM pg a JOIN pg b ON a.lang = b.lang AND a.g = b.g AND a.doc_id < b.doc_id
+  FROM {grams} a JOIN {grams} b ON a.lang = b.lang AND a.g = b.g AND a.doc_id < b.doc_id
 ),
 r AS (
   SELECT id_a, id_b, ia - ib AS diag, ia,
@@ -704,6 +710,10 @@ runs AS (
 SELECT id_a, id_b, CAST(MAX(span) AS BIGINT) AS max_span
 FROM runs GROUP BY id_a, id_b HAVING MAX(span) >= 32
 """
+
+
+_SHARED_SPAN_ORACLE = f"""
+{_SPAN_GRAMS_CTE}{_span_runs_sql('pg')}"""
 
 
 @query("dedup_shared_span_pairs", oracle=_SHARED_SPAN_ORACLE)
@@ -728,34 +738,15 @@ def dedup_shared_span_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 # semantics are deterministic (a pure function of the corpus), so the
 # preset is oracle-checkable like any other query: spans whose every
 # k-window is hot are undetected, runs crossing a hot gram split.
-_SHARED_SPAN_CAPPED_ORACLE = """
-WITH pg AS (
-  SELECT lang, doc_id, i, substr(text, i, 16) AS g
-  FROM documents, LATERAL (SELECT unnest(generate_series(1, greatest(length(text) - 15, 0))) AS i)
-),
-cold AS (
+_SHARED_SPAN_CAPPED_ORACLE = f"""
+{_SPAN_GRAMS_CTE}cold AS (
   SELECT lang, g FROM pg GROUP BY lang, g HAVING COUNT(DISTINCT doc_id) <= 8
 ),
 pgc AS (
   SELECT pg.lang, pg.doc_id, pg.i, pg.g
   FROM pg JOIN cold ON pg.lang = cold.lang AND pg.g = cold.g
 ),
-m AS (
-  SELECT a.doc_id AS id_a, b.doc_id AS id_b, a.i AS ia, b.i AS ib
-  FROM pgc a JOIN pgc b ON a.lang = b.lang AND a.g = b.g AND a.doc_id < b.doc_id
-),
-r AS (
-  SELECT id_a, id_b, ia - ib AS diag, ia,
-         ia - ROW_NUMBER() OVER (PARTITION BY id_a, id_b, ia - ib ORDER BY ia) AS grp
-  FROM m
-),
-runs AS (
-  SELECT id_a, id_b, COUNT(*) + 15 AS span
-  FROM r GROUP BY id_a, id_b, diag, grp
-)
-SELECT id_a, id_b, CAST(MAX(span) AS BIGINT) AS max_span
-FROM runs GROUP BY id_a, id_b HAVING MAX(span) >= 32
-"""
+{_span_runs_sql('pgc')}"""
 
 
 @query("dedup_shared_span_pairs_capped", oracle=_SHARED_SPAN_CAPPED_ORACLE)

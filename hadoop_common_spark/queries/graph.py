@@ -66,8 +66,9 @@ def graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_TRIANGLE_ORACLE = r"""
-WITH bg AS (
+# Distinct undirected adjacent-bigram edges e(u < v) of the documents'
+# whitespace tokens: the word co-occurrence graph of both bigram queries.
+_BIGRAM_EDGE_CTES = r"""WITH bg AS (
   SELECT doc_id, t AS toks
   FROM (SELECT doc_id, list_filter(string_split_regex(lower(text), '\s+'), x -> x <> '') AS t
         FROM documents)
@@ -81,7 +82,10 @@ e AS (
   SELECT DISTINCT least(pr[1], pr[2]) AS u, greatest(pr[1], pr[2]) AS v
   FROM raw WHERE pr[1] <> pr[2]
 ),
-nodes AS (SELECT u AS node FROM e UNION SELECT v FROM e)
+"""
+
+_TRIANGLE_ORACLE = f"""
+{_BIGRAM_EDGE_CTES}nodes AS (SELECT u AS node FROM e UNION SELECT v FROM e)
 SELECT
   CAST((SELECT COUNT(*) FROM nodes) AS BIGINT) AS n_nodes,
   CAST((SELECT COUNT(*) FROM e) AS BIGINT) AS n_edges,
@@ -89,6 +93,24 @@ SELECT
         FROM e a JOIN e b ON b.u = a.v JOIN e c ON c.u = a.u AND c.v = b.v
        ) AS BIGINT) AS n_triangles
 """
+
+
+def _bigram_edges(spark: SparkSession) -> DataFrame:
+    """Spark side of _BIGRAM_EDGE_CTES: one (src, dst) row per adjacent
+    token pair; the triangle operators orient and dedup them."""
+    toks = F.filter(
+        F.split(F.lower(F.col("text")), r"\s+"), lambda x: x != ""
+    )
+    m = F.greatest(F.size(toks) - 1, F.lit(0))
+    prs = F.zip_with(
+        F.slice(toks, 1, m), F.slice(toks, 2, m),
+        lambda x, y: F.struct(x.alias("w1"), y.alias("w2")),
+    )
+    return (
+        spark.table("documents")
+        .select(F.explode(prs).alias("p"))
+        .select(F.col("p.w1").alias("src"), F.col("p.w2").alias("dst"))
+    )
 
 
 @query("graph_triangle_count", oracle=_TRIANGLE_ORACLE)
@@ -102,38 +124,11 @@ def graph_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     the canonical x<y<z three-way join."""
     from hadoop_common_spark.operators.graph import triangle_count
 
-    docs = spark.table("documents")
-    toks = F.filter(
-        F.split(F.lower(F.col("text")), r"\s+"), lambda x: x != ""
-    )
-    m = F.greatest(F.size(toks) - 1, F.lit(0))
-    prs = F.zip_with(
-        F.slice(toks, 1, m), F.slice(toks, 2, m),
-        lambda x, y: F.struct(x.alias("w1"), y.alias("w2")),
-    )
-    edges = (
-        docs.select(F.explode(prs).alias("p"))
-        .select(F.col("p.w1").alias("src"), F.col("p.w2").alias("dst"))
-    )
-    return triangle_count(edges, "src", "dst")
+    return triangle_count(_bigram_edges(spark), "src", "dst")
 
 
-_CLUSTERING_ORACLE = r"""
-WITH bg AS (
-  SELECT doc_id, t AS toks
-  FROM (SELECT doc_id, list_filter(string_split_regex(lower(text), '\s+'), x -> x <> '') AS t
-        FROM documents)
-),
-raw AS (
-  SELECT unnest(list_transform(generate_series(1, len(toks) - 1),
-                               i -> [toks[i], toks[i + 1]])) AS pr
-  FROM bg
-),
-e AS (
-  SELECT DISTINCT least(pr[1], pr[2]) AS u, greatest(pr[1], pr[2]) AS v
-  FROM raw WHERE pr[1] <> pr[2]
-),
-deg AS (
+_CLUSTERING_ORACLE = f"""
+{_BIGRAM_EDGE_CTES}deg AS (
   SELECT node, CAST(COUNT(*) AS BIGINT) AS deg FROM (
     SELECT u AS node FROM e UNION ALL SELECT v FROM e
   ) GROUP BY node
@@ -166,20 +161,7 @@ def graph_clustering_coefficient(spark: SparkSession, sf_dir: str) -> DataFrame:
     final double division keep coefficients engine-exact."""
     from hadoop_common_spark.operators.graph import triangle_participation
 
-    docs = spark.table("documents")
-    toks = F.filter(
-        F.split(F.lower(F.col("text")), r"\s+"), lambda x: x != ""
-    )
-    m = F.greatest(F.size(toks) - 1, F.lit(0))
-    prs = F.zip_with(
-        F.slice(toks, 1, m), F.slice(toks, 2, m),
-        lambda x, y: F.struct(x.alias("w1"), y.alias("w2")),
-    )
-    edges = (
-        docs.select(F.explode(prs).alias("p"))
-        .select(F.col("p.w1").alias("src"), F.col("p.w2").alias("dst"))
-    )
-    return triangle_participation(edges, "src", "dst")
+    return triangle_participation(_bigram_edges(spark), "src", "dst")
 
 _LP_ROUNDS = 3
 
@@ -194,6 +176,20 @@ e0 AS (SELECT DISTINCT 2 * o_custkey AS src, 2 * l_suppkey + 1 AS dst
        FROM orders JOIN lineitem ON l_orderkey = o_orderkey
        WHERE l_quantity <= 2)
 """
+
+
+def _purchase_edges(spark: SparkSession) -> DataFrame:
+    """Spark side of _LP_EDGES_SQL (duplicates kept): the sparsified
+    bipartite purchase graph in the 2*custkey / 2*suppkey+1 encoding."""
+    return (
+        spark.table("orders")
+        .join(spark.table("lineitem"), F.col("l_orderkey") == F.col("o_orderkey"))
+        .filter(F.col("l_quantity") <= 2)
+        .select(
+            (2 * F.col("o_custkey")).alias("src"),
+            (2 * F.col("l_suppkey") + 1).alias("dst"),
+        )
+    )
 
 
 def _label_prop_oracle() -> str:
@@ -227,16 +223,7 @@ def graph_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
     dedup_cluster_resolution."""
     from hadoop_common_spark.operators.graph import min_label_rounds
 
-    edges = (
-        spark.table("orders")
-        .join(spark.table("lineitem"), F.col("l_orderkey") == F.col("o_orderkey"))
-        .filter(F.col("l_quantity") <= 2)
-        .select(
-            (2 * F.col("o_custkey")).alias("src"),
-            (2 * F.col("l_suppkey") + 1).alias("dst"),
-        )
-    )
-    labels = min_label_rounds(edges, rounds=_LP_ROUNDS)
+    labels = min_label_rounds(_purchase_edges(spark), rounds=_LP_ROUNDS)
     return labels.groupBy("label").agg(F.count(F.lit(1)).cast("bigint").alias("n_nodes"))
 
 
@@ -286,13 +273,4 @@ def graph_bfs_distances(spark: SparkSession, sf_dir: str) -> DataFrame:
     declarative oracle-replayable plan. Returns reached nodes only."""
     from hadoop_common_spark.operators.graph import bfs_min_distance
 
-    edges = (
-        spark.table("orders")
-        .join(spark.table("lineitem"), F.col("l_orderkey") == F.col("o_orderkey"))
-        .filter(F.col("l_quantity") <= 2)
-        .select(
-            (2 * F.col("o_custkey")).alias("src"),
-            (2 * F.col("l_suppkey") + 1).alias("dst"),
-        )
-    )
-    return bfs_min_distance(edges, "src", "dst", rounds=_BFS_ROUNDS)
+    return bfs_min_distance(_purchase_edges(spark), "src", "dst", rounds=_BFS_ROUNDS)

@@ -314,27 +314,22 @@ def entity_link_fuzzy_ids(spark: SparkSession, sf_dir: str) -> DataFrame:
 # match, interval overlap). Spark plans the bare BETWEEN as a nested
 # loop; operators/joins.interval_lookup_join_binned turns it into one
 # hash equi-join on (nation, bin).
-_BAND_ORACLE = f"""
+def _band_oracle(half_width: float) -> str:
+    return f"""
 SELECT s.s_suppkey AS suppkey,
        CAST(COUNT(*) AS BIGINT) AS n_matched,
        {dsum_sql('c.c_acctbal')} AS sum_matched_bal
 FROM supplier s JOIN customer c
   ON c.c_nationkey = s.s_nationkey
- AND c.c_acctbal >= s.s_acctbal - 100.0
- AND c.c_acctbal <= s.s_acctbal + 100.0
+ AND c.c_acctbal >= s.s_acctbal - {half_width}
+ AND c.c_acctbal <= s.s_acctbal + {half_width}
 GROUP BY s.s_suppkey
 """
 
 
-@query("supplier_balance_band_match", oracle=_BAND_ORACLE)
-def supplier_balance_band_match(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per supplier: same-nation customers whose account balance falls
-    inside the supplier's ±100 band — count and exact-decimal balance
-    sum. The interval side explodes to the bins its span covers
-    (fan-out ~2 at bin_width=200), the point side keeps one bin, and
-    the exact BETWEEN filter prunes bin-edge candidates — one shuffle
-    per side, output bounded by true matches. dsum keeps the double
-    aggregate order-independent (bit-stable at any partitioning)."""
+def _band_match(spark: SparkSession, half_width: float, bin_width: float) -> DataFrame:
+    """Spark side of _band_oracle: customer balances (points) binned
+    against supplier balance +-half_width (intervals) within a nation."""
     from hadoop_common_spark.functions.exact import dsum
     from hadoop_common_spark.operators.joins import interval_lookup_join_binned
 
@@ -344,12 +339,12 @@ def supplier_balance_band_match(spark: SparkSession, sf_dir: str) -> DataFrame:
     iv = spark.table("supplier").select(
         F.col("s_nationkey").alias("nationkey"),
         F.col("s_suppkey").alias("suppkey"),
-        (F.col("s_acctbal") - 100.0).alias("_lo"),
-        (F.col("s_acctbal") + 100.0).alias("_hi"),
+        (F.col("s_acctbal") - half_width).alias("_lo"),
+        (F.col("s_acctbal") + half_width).alias("_hi"),
     )
     return (
         interval_lookup_join_binned(
-            pts, iv, "c_acctbal", "_lo", "_hi", bin_width=200.0,
+            pts, iv, "c_acctbal", "_lo", "_hi", bin_width=bin_width,
             block_cols=["nationkey"],
         )
         .groupBy("suppkey")
@@ -360,19 +355,19 @@ def supplier_balance_band_match(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_WIDE_BAND_ORACLE = f"""
-SELECT s.s_suppkey AS suppkey,
-       CAST(COUNT(*) AS BIGINT) AS n_matched,
-       {dsum_sql('c.c_acctbal')} AS sum_matched_bal
-FROM supplier s JOIN customer c
-  ON c.c_nationkey = s.s_nationkey
- AND c.c_acctbal >= s.s_acctbal - 1000.0
- AND c.c_acctbal <= s.s_acctbal + 1000.0
-GROUP BY s.s_suppkey
-"""
+@query("supplier_balance_band_match", oracle=_band_oracle(100.0))
+def supplier_balance_band_match(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Per supplier: same-nation customers whose account balance falls
+    inside the supplier's ±100 band — count and exact-decimal balance
+    sum. The interval side explodes to the bins its span covers
+    (fan-out ~2 at bin_width=200), the point side keeps one bin, and
+    the exact BETWEEN filter prunes bin-edge candidates — one shuffle
+    per side, output bounded by true matches. dsum keeps the double
+    aggregate order-independent (bit-stable at any partitioning)."""
+    return _band_match(spark, 100.0, bin_width=200.0)
 
 
-@query("supplier_balance_wide_band_match", oracle=_WIDE_BAND_ORACLE)
+@query("supplier_balance_wide_band_match", oracle=_band_oracle(1000.0))
 def supplier_balance_wide_band_match(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The interval lookup join's OTHER width regime (VERDICT r10 #5):
     ±1000 bands probed at bin_width=100 — every interval explodes to
@@ -386,29 +381,7 @@ def supplier_balance_wide_band_match(spark: SparkSession, sf_dir: str) -> DataFr
     (sequence over 21 bins, edge pruning at both ends) at a width ratio
     the narrow row never exercises. dsum keeps the double aggregate
     order-independent."""
-    from hadoop_common_spark.functions.exact import dsum
-    from hadoop_common_spark.operators.joins import interval_lookup_join_binned
-
-    pts = spark.table("customer").select(
-        F.col("c_nationkey").alias("nationkey"), "c_acctbal"
-    )
-    iv = spark.table("supplier").select(
-        F.col("s_nationkey").alias("nationkey"),
-        F.col("s_suppkey").alias("suppkey"),
-        (F.col("s_acctbal") - 1000.0).alias("_lo"),
-        (F.col("s_acctbal") + 1000.0).alias("_hi"),
-    )
-    return (
-        interval_lookup_join_binned(
-            pts, iv, "c_acctbal", "_lo", "_hi", bin_width=100.0,
-            block_cols=["nationkey"],
-        )
-        .groupBy("suppkey")
-        .agg(
-            F.count(F.lit(1)).cast("bigint").alias("n_matched"),
-            dsum("c_acctbal").alias("sum_matched_bal"),
-        )
-    )
+    return _band_match(spark, 1000.0, bin_width=100.0)
 
 
 # Bloom false-positive-rate eval (r6) — the measured-error member for

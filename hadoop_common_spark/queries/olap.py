@@ -68,24 +68,18 @@ def cube_status_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query(
-    "grouping_sets_events",
-    oracle="""
+_GROUPING_SETS_EVENTS_SQL = """
     SELECT user_id, event_type, COUNT(*) AS n_events
     FROM events
     GROUP BY GROUPING SETS ((user_id), (event_type))
-    """,
-)
+    """
+
+
+@query("grouping_sets_events", oracle=_GROUPING_SETS_EVENTS_SQL)
 def grouping_sets_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Explicit grouping sets: per-user totals and per-type totals in one
     aggregation pass (one shuffle instead of a union of two groupBys)."""
-    return spark.sql(
-        """
-        SELECT user_id, event_type, COUNT(*) AS n_events
-        FROM events
-        GROUP BY GROUPING SETS ((user_id), (event_type))
-        """
-    )
+    return spark.sql(_GROUPING_SETS_EVENTS_SQL)
 
 
 # CAST(... AS BIGINT): DuckDB types SUM(int) as HUGEINT, Spark's pivot

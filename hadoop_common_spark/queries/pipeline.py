@@ -17,18 +17,21 @@ from hadoop_common_spark.operators.textstats import (
 )
 from hadoop_common_spark.queries import query
 
-_ORACLE = """
+# operators.textstats.quality_score over n_chars and n_tok2 (DOUBLE)
+_QUALITY_SQL = """(0.4 * (CASE WHEN n_tok2 >= 5 AND n_tok2 <= 100000 THEN 1.0 ELSE 0.0 END)
+          + 0.3 * (CASE WHEN n_tok2 > 0 AND (n_chars / n_tok2) >= 2.0 AND (n_chars / n_tok2) <= 12.0
+                        THEN 1.0 ELSE 0.0 END)
+          + 0.3 * (CASE WHEN n_chars > 0
+                        THEN CAST(length(regexp_replace(text, '[^A-Za-z ]', '', 'g')) AS DOUBLE) / n_chars
+                        ELSE 0.0 END))"""
+
+_ORACLE = f"""
 WITH scored AS (
   SELECT doc_id, lang, text,
          md5(text) AS content_md5,
          CAST(CASE WHEN trim(text) = '' THEN 0
                    ELSE len(string_split_regex(trim(text), '\\s+')) END AS BIGINT) AS n_tok,
-         (0.4 * (CASE WHEN n_tok2 >= 5 AND n_tok2 <= 100000 THEN 1.0 ELSE 0.0 END)
-          + 0.3 * (CASE WHEN n_tok2 > 0 AND (n_chars / n_tok2) >= 2.0 AND (n_chars / n_tok2) <= 12.0
-                        THEN 1.0 ELSE 0.0 END)
-          + 0.3 * (CASE WHEN n_chars > 0
-                        THEN CAST(length(regexp_replace(text, '[^A-Za-z ]', '', 'g')) AS DOUBLE) / n_chars
-                        ELSE 0.0 END)) AS quality
+         {_QUALITY_SQL} AS quality
   FROM (
     SELECT doc_id, lang, text,
            CAST(length(text) AS DOUBLE) AS n_chars,
@@ -147,8 +150,9 @@ def corpus_token_shards(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_DECONTAM_ORACLE = """
-WITH toks AS (
+# Distinct word 3-grams `shs` of every document and the benchmark slice's
+# (doc_id % 101 == 0) set `bench`: the input of both contamination oracles.
+_BENCH_SHINGLE_CTES = """WITH toks AS (
   SELECT lang, doc_id, string_split_regex(text, '\\s+') AS t FROM documents
 ),
 shs AS (
@@ -158,7 +162,21 @@ shs AS (
   FROM toks
 ),
 bench AS (SELECT DISTINCT sh FROM shs WHERE doc_id % 101 = 0),
-cont AS (
+"""
+
+
+def _bench_shingles(spark: SparkSession) -> tuple[DataFrame, DataFrame]:
+    """Spark side of _BENCH_SHINGLE_CTES: (shs, bench)."""
+    from hadoop_common_spark.operators.dedup import word_shingles
+
+    sh = spark.table("documents").select(
+        "lang", "doc_id", F.explode(word_shingles("text", 3)).alias("sh")
+    )
+    return sh, sh.filter(F.col("doc_id") % 101 == 0).select("sh").distinct()
+
+
+_DECONTAM_ORACLE = f"""
+{_BENCH_SHINGLE_CTES}cont AS (
   SELECT DISTINCT s.lang, s.doc_id
   FROM shs s JOIN bench b ON s.sh = b.sh
   WHERE s.doc_id % 101 <> 0
@@ -175,12 +193,7 @@ def corpus_decontamination(spark: SparkSession, sf_dir: str) -> DataFrame:
     benchmark shingle set is tiny by construction, so it broadcasts and
     the corpus side is one narrow explode + semi join — no shuffle of
     the corpus at any scale."""
-    from hadoop_common_spark.operators.dedup import word_shingles
-
-    sh = spark.table("documents").select(
-        "lang", "doc_id", F.explode(word_shingles("text", 3)).alias("sh")
-    )
-    bench = sh.filter(F.col("doc_id") % 101 == 0).select("sh").distinct()
+    sh, bench = _bench_shingles(spark)
     return (
         sh.filter(F.col("doc_id") % 101 != 0)
         .join(F.broadcast(bench), "sh", "left_semi")
@@ -334,15 +347,10 @@ def corpus_global_shuffle(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).select("doc_id", "pos")
 
 
-_QUALITY_BIN_ORACLE = """
+_QUALITY_BIN_ORACLE = f"""
 WITH scored AS (
   SELECT doc_id, n_chars,
-         (0.4 * (CASE WHEN n_tok2 >= 5 AND n_tok2 <= 100000 THEN 1.0 ELSE 0.0 END)
-          + 0.3 * (CASE WHEN n_tok2 > 0 AND (n_chars / n_tok2) >= 2.0 AND (n_chars / n_tok2) <= 12.0
-                        THEN 1.0 ELSE 0.0 END)
-          + 0.3 * (CASE WHEN n_chars > 0
-                        THEN CAST(length(regexp_replace(text, '[^A-Za-z ]', '', 'g')) AS DOUBLE) / n_chars
-                        ELSE 0.0 END)) AS q
+         {_QUALITY_SQL} AS q
   FROM (
     SELECT doc_id, text, CAST(length(text) AS DOUBLE) AS n_chars,
            CAST(CASE WHEN trim(text) = '' THEN 0
@@ -460,18 +468,8 @@ def corpus_incremental_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_CONTAM_SCORE_ORACLE = """
-WITH toks AS (
-  SELECT lang, doc_id, string_split_regex(text, '\\s+') AS t FROM documents
-),
-shs AS (
-  SELECT lang, doc_id,
-         unnest(list_distinct(list_transform(generate_series(1, len(t)-2),
-                i -> t[i] || ' ' || t[i+1] || ' ' || t[i+2]))) AS sh
-  FROM toks
-),
-bench AS (SELECT DISTINCT sh FROM shs WHERE doc_id % 101 = 0),
-tot AS (
+_CONTAM_SCORE_ORACLE = f"""
+{_BENCH_SHINGLE_CTES}tot AS (
   SELECT lang, doc_id, COUNT(*) AS n_sh FROM shs
   WHERE doc_id % 101 <> 0 GROUP BY lang, doc_id
 ),
@@ -499,13 +497,8 @@ def corpus_contamination_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     broadcasts; corpus-side work is one explode + per-doc count — the
     overlap ratio is a single exact double division, so decile binning
     is engine-stable."""
-    from hadoop_common_spark.operators.dedup import word_shingles
-
-    sh = spark.table("documents").select(
-        "lang", "doc_id", F.explode(word_shingles("text", 3)).alias("sh")
-    )
+    sh, bench = _bench_shingles(spark)
     corpus = sh.filter(F.col("doc_id") % 101 != 0)
-    bench = sh.filter(F.col("doc_id") % 101 == 0).select("sh").distinct()
     tot = corpus.groupBy("lang", "doc_id").agg(F.count(F.lit(1)).alias("n_sh"))
     hits = (
         corpus.join(F.broadcast(bench), "sh", "left_semi")

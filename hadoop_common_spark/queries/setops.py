@@ -88,14 +88,18 @@ def distinct_user_event_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 # (Plain user-id sets are degenerate on this dataset — every user hits
 # every type — so the cell grain is what makes the metric informative;
 # the shape is identical for any element definition.)
-_OVERLAP_ORACLE = """
-WITH tu AS (
+# Each event type's distinct (user, hour-of-day) cells `tu`: the footprint
+# both audience-overlap oracles compare (Spark side: _overlap_cells).
+_OVERLAP_CELLS_CTE = """WITH tu AS (
   SELECT DISTINCT event_type,
          user_id * 24
            + (CAST(floor(epoch(ts)) AS BIGINT) % 86400) // 3600 AS cell
   FROM events
 ),
-sizes AS (SELECT event_type, CAST(COUNT(*) AS BIGINT) AS n FROM tu GROUP BY 1),
+"""
+
+_OVERLAP_ORACLE = f"""
+{_OVERLAP_CELLS_CTE}sizes AS (SELECT event_type, CAST(COUNT(*) AS BIGINT) AS n FROM tu GROUP BY 1),
 inter AS (
   SELECT a.event_type AS type_a, b.event_type AS type_b,
          CAST(COUNT(*) AS BIGINT) AS n_common
@@ -184,13 +188,7 @@ def _overlap_kmv_oracle() -> str:
 
     h = hash60_sql("'ao:' || CAST(cell AS VARCHAR)")
     return f"""
-WITH tu AS (
-  SELECT DISTINCT event_type,
-         user_id * 24
-           + (CAST(floor(epoch(ts)) AS BIGINT) % 86400) // 3600 AS cell
-  FROM events
-),
-hashed AS (SELECT event_type, cell, {h} AS hk FROM tu),
+{_OVERLAP_CELLS_CTE}hashed AS (SELECT event_type, cell, {h} AS hk FROM tu),
 samp AS (
   SELECT event_type, cell, hk,
          ROW_NUMBER() OVER (PARTITION BY event_type ORDER BY hk, cell) AS hr

@@ -264,8 +264,9 @@ def _pq_sqdist_sql(a: str, b: str) -> str:
 
 _PQ_M, _PQ_DSUB, _PQ_KSUB = 4, 16, 16
 
-_PQ_ORACLE = f"""
-WITH samp AS (
+# samp -> cb (md5-sampled codebooks), sv -> enc (nearest-code encoding),
+# dtab (per-query distance table): the ADC pipeline both PQ oracles price
+_PQ_CTES = f"""WITH samp AS (
   SELECT embedding,
          ROW_NUMBER() OVER (ORDER BY md5(CAST(vec_id AS VARCHAR)), vec_id) - 1 AS code
   FROM embeddings
@@ -298,7 +299,10 @@ dtab AS (
   FROM embeddings q, cb
   WHERE q.vec_id < 10
 ),
-adc AS (
+"""
+
+_PQ_ORACLE = f"""
+{_PQ_CTES}adc AS (
   SELECT dt.query_id, en.vec_id AS neighbor_id,
          list_reduce(array_agg(dt.d ORDER BY en.sub), (x, y) -> x + y) AS adc
   FROM enc en JOIN dtab dt ON dt.sub = en.sub AND dt.code = en.code
@@ -313,6 +317,17 @@ SELECT query_id, neighbor_id, rank, adc FROM (
 """
 
 
+def _pq_codes(emb: DataFrame) -> tuple[DataFrame, DataFrame]:
+    """Spark side of _PQ_CTES' cb and enc: md5-sampled codebooks
+    (iters=0) and every vector's PQ codes."""
+    from hadoop_common_spark.operators.pq import pq_codebooks, pq_encode
+
+    cb = pq_codebooks(
+        emb, "vec_id", "embedding", m=_PQ_M, dsub=_PQ_DSUB, ksub=_PQ_KSUB, iters=0
+    )
+    return cb, pq_encode(emb, cb, "vec_id", "embedding", m=_PQ_M, dsub=_PQ_DSUB)
+
+
 @query("similarity_pq_topk", oracle=_PQ_ORACLE)
 def similarity_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Product-quantization ANN (FAISS-lineage PQ/ADC): 64-dim vectors
@@ -325,17 +340,10 @@ def similarity_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     same contracts and are property-tested (exact reconstruction at
     ksub >= #rows, distortion non-increasing in iters). Zero data
     shuffle until the final per-query top-k window."""
-    from hadoop_common_spark.operators.pq import (
-        pq_adc_search,
-        pq_codebooks,
-        pq_encode,
-    )
+    from hadoop_common_spark.operators.pq import pq_adc_search
 
     emb = spark.table("embeddings")
-    cb = pq_codebooks(
-        emb, "vec_id", "embedding", m=_PQ_M, dsub=_PQ_DSUB, ksub=_PQ_KSUB, iters=0
-    )
-    codes = pq_encode(emb, cb, "vec_id", "embedding", m=_PQ_M, dsub=_PQ_DSUB)
+    cb, codes = _pq_codes(emb)
     return pq_adc_search(
         emb.filter(F.col("vec_id") < 10),
         codes,
@@ -360,19 +368,12 @@ def similarity_ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     distance). The pruned configuration is recall-property-tested in
     tests/."""
     from hadoop_common_spark.operators.ivf import ivf_index, kmeans_fit
-    from hadoop_common_spark.operators.pq import (
-        ivfpq_search,
-        pq_codebooks,
-        pq_encode,
-    )
+    from hadoop_common_spark.operators.pq import ivfpq_search
 
     emb = spark.table("embeddings")
     cents = kmeans_fit(emb, "embedding", "vec_id", nlist=8, iters=2)
     cells = ivf_index(emb, cents, "embedding").select("vec_id", "cell")
-    cb = pq_codebooks(
-        emb, "vec_id", "embedding", m=_PQ_M, dsub=_PQ_DSUB, ksub=_PQ_KSUB, iters=0
-    )
-    codes = pq_encode(emb, cb, "vec_id", "embedding", m=_PQ_M, dsub=_PQ_DSUB)
+    cb, codes = _pq_codes(emb)
     index_codes = cells.join(codes, "vec_id")
     return ivfpq_search(
         emb.filter(F.col("vec_id") < 10),
@@ -554,8 +555,19 @@ def similarity_lsh_multiprobe_topk(spark: SparkSession, sf_dir: str) -> DataFram
 # the evaluation itself is oracle-checkable — sign_lsh_band_recall gives
 # the closed-form PREDICTION, this query measures the actual.
 
-_RECALL_ORACLE = f"""
-WITH q AS (
+# Shared by every recall eval: hits of the approx top-5 among the exact
+# top-5 `gt`, per query.
+_RECALL_TAIL = """SELECT gt.query_id,
+       CAST(SUM(CASE WHEN a.neighbor_id IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT) AS n_hits,
+       CAST(SUM(CASE WHEN a.neighbor_id IS NOT NULL THEN 1 ELSE 0 END) AS DOUBLE)
+         / CAST(5.0 AS DOUBLE) AS recall
+FROM gt LEFT JOIN approx a
+  ON gt.query_id = a.query_id AND gt.neighbor_id = a.neighbor_id
+GROUP BY gt.query_id
+"""
+
+# The exact cosine top-5 of the first 10 vectors (q, d, gt).
+_COSINE_GT_CTES = f"""WITH q AS (
   SELECT vec_id AS query_id, embedding AS q_vec FROM embeddings WHERE vec_id < 10
 ),
 d AS (
@@ -569,7 +581,10 @@ gt AS (
     FROM d, q WHERE neighbor_id <> query_id
   ) WHERE rank <= 5
 ),
-bq AS (
+"""
+
+_RECALL_ORACLE = f"""
+{_COSINE_GT_CTES}bq AS (
   SELECT query_id, q_vec, {sign_lsh_bucket_sql('q_vec', DIM, PLANES)} AS bucket FROM q
 ),
 bd AS (
@@ -584,14 +599,21 @@ approx AS (
     WHERE bd.neighbor_id <> bq.query_id
   ) WHERE rank <= 5
 )
-SELECT gt.query_id,
-       CAST(SUM(CASE WHEN a.neighbor_id IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT) AS n_hits,
-       CAST(SUM(CASE WHEN a.neighbor_id IS NOT NULL THEN 1 ELSE 0 END) AS DOUBLE)
-         / CAST(5.0 AS DOUBLE) AS recall
-FROM gt LEFT JOIN approx a
-  ON gt.query_id = a.query_id AND gt.neighbor_id = a.neighbor_id
-GROUP BY gt.query_id
-"""
+{_RECALL_TAIL}"""
+
+
+def _recall_at_5(truth: DataFrame, approx: DataFrame) -> DataFrame:
+    """Spark side of _RECALL_TAIL: per query, how many of the exact top-5
+    (`truth`) the approx side flagged `hit`, and that count over 5."""
+    hit = F.coalesce(F.col("hit"), F.lit(0))
+    return (
+        truth.join(approx, ["query_id", "neighbor_id"], "left")
+        .groupBy("query_id")
+        .agg(
+            F.sum(hit).cast("bigint").alias("n_hits"),
+            (F.sum(hit).cast("double") / F.lit(5.0).cast("double")).alias("recall"),
+        )
+    )
 
 
 @query("similarity_lsh_recall_eval", oracle=_RECALL_ORACLE)
@@ -635,17 +657,7 @@ def similarity_lsh_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("rank") <= 5)
         .select("query_id", "neighbor_id", F.lit(1).alias("hit"))
     )
-    return (
-        truth.join(approx, ["query_id", "neighbor_id"], "left")
-        .groupBy("query_id")
-        .agg(
-            F.sum(F.coalesce(F.col("hit"), F.lit(0))).cast("bigint").alias("n_hits"),
-            (
-                F.sum(F.coalesce(F.col("hit"), F.lit(0))).cast("double")
-                / F.lit(5.0).cast("double")
-            ).alias("recall"),
-        )
-    )
+    return _recall_at_5(truth, approx)
 
 
 # PQ recall eval (r6): the quantization-loss twin of
@@ -657,40 +669,7 @@ def similarity_lsh_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
 # non-query vector), which is exactly the number an m/dsub/ksub tuning
 # loop needs.
 _PQ_RECALL_ORACLE = f"""
-WITH samp AS (
-  SELECT embedding,
-         ROW_NUMBER() OVER (ORDER BY md5(CAST(vec_id AS VARCHAR)), vec_id) - 1 AS code
-  FROM embeddings
-  QUALIFY code < {_PQ_KSUB}
-),
-subs AS (SELECT unnest(generate_series(0, {_PQ_M - 1})) AS sub),
-cb AS (
-  SELECT subs.sub, samp.code,
-         samp.embedding[subs.sub*{_PQ_DSUB}+1 : (subs.sub+1)*{_PQ_DSUB}] AS centroid
-  FROM samp, subs
-),
-sv AS (
-  SELECT e.vec_id, subs.sub,
-         e.embedding[subs.sub*{_PQ_DSUB}+1 : (subs.sub+1)*{_PQ_DSUB}] AS svec
-  FROM embeddings e, subs
-),
-enc AS (
-  SELECT vec_id, sub, code FROM (
-    SELECT sv.vec_id, sv.sub, cb.code,
-           ROW_NUMBER() OVER (
-             PARTITION BY sv.vec_id, sv.sub
-             ORDER BY {_pq_sqdist_sql('sv.svec', 'cb.centroid')}, cb.code
-           ) AS rk
-    FROM sv JOIN cb ON sv.sub = cb.sub
-  ) WHERE rk = 1
-),
-dtab AS (
-  SELECT q.vec_id AS query_id, cb.sub, cb.code,
-         {_pq_sqdist_sql(f"q.embedding[cb.sub*{_PQ_DSUB}+1 : (cb.sub+1)*{_PQ_DSUB}]", "cb.centroid")} AS d
-  FROM embeddings q, cb
-  WHERE q.vec_id < 10
-),
-approx AS (
+{_PQ_CTES}approx AS (
   SELECT query_id, neighbor_id FROM (
     SELECT query_id, neighbor_id, adc,
            ROW_NUMBER() OVER (PARTITION BY query_id ORDER BY adc ASC, neighbor_id ASC) AS rank
@@ -713,14 +692,7 @@ gt AS (
     WHERE q.vec_id < 10
   ) WHERE rank <= 5
 )
-SELECT gt.query_id,
-       CAST(SUM(CASE WHEN a.neighbor_id IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT) AS n_hits,
-       CAST(SUM(CASE WHEN a.neighbor_id IS NOT NULL THEN 1 ELSE 0 END) AS DOUBLE)
-         / CAST(5.0 AS DOUBLE) AS recall
-FROM gt LEFT JOIN approx a
-  ON gt.query_id = a.query_id AND gt.neighbor_id = a.neighbor_id
-GROUP BY gt.query_id
-"""
+{_RECALL_TAIL}"""
 
 
 @query("similarity_pq_recall_eval", oracle=_PQ_RECALL_ORACLE)
@@ -735,19 +707,11 @@ def similarity_pq_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     production size); the ADC side stays m-lookups-per-candidate."""
     from pyspark.sql import Window
 
-    from hadoop_common_spark.operators.pq import (
-        _sq_dist,
-        pq_adc_search,
-        pq_codebooks,
-        pq_encode,
-    )
+    from hadoop_common_spark.operators.pq import _sq_dist, pq_adc_search
 
     emb = spark.table("embeddings")
     queries = emb.filter(F.col("vec_id") < 10)
-    cb = pq_codebooks(
-        emb, "vec_id", "embedding", m=_PQ_M, dsub=_PQ_DSUB, ksub=_PQ_KSUB, iters=0
-    )
-    codes = pq_encode(emb, cb, "vec_id", "embedding", m=_PQ_M, dsub=_PQ_DSUB)
+    cb, codes = _pq_codes(emb)
     approx = pq_adc_search(
         queries, codes, cb, "vec_id", "embedding",
         k=5, m=_PQ_M, dsub=_PQ_DSUB, ksub=_PQ_KSUB,
@@ -770,17 +734,7 @@ def similarity_pq_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("rank") <= 5)
         .select("query_id", "neighbor_id")
     )
-    return (
-        truth.join(approx, ["query_id", "neighbor_id"], "left")
-        .groupBy("query_id")
-        .agg(
-            F.sum(F.coalesce(F.col("hit"), F.lit(0))).cast("bigint").alias("n_hits"),
-            (
-                F.sum(F.coalesce(F.col("hit"), F.lit(0))).cast("double")
-                / F.lit(5.0).cast("double")
-            ).alias("recall"),
-        )
-    )
+    return _recall_at_5(truth, approx)
 
 
 # Matryoshka / truncated-dimension recall eval (r6): how much recall@5
@@ -791,21 +745,7 @@ def similarity_pq_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
 _MATRYOSHKA_DIM = 16
 
 _MATRYOSHKA_ORACLE = f"""
-WITH q AS (
-  SELECT vec_id AS query_id, embedding AS q_vec FROM embeddings WHERE vec_id < 10
-),
-d AS (
-  SELECT vec_id AS neighbor_id, embedding AS d_vec FROM embeddings
-),
-gt AS (
-  SELECT query_id, neighbor_id FROM (
-    SELECT query_id, neighbor_id,
-           ROW_NUMBER() OVER (PARTITION BY query_id
-                              ORDER BY {cosine_sql('q_vec', 'd_vec')} DESC, neighbor_id ASC) AS rank
-    FROM d, q WHERE neighbor_id <> query_id
-  ) WHERE rank <= 5
-),
-approx AS (
+{_COSINE_GT_CTES}approx AS (
   SELECT query_id, neighbor_id FROM (
     SELECT query_id, neighbor_id,
            ROW_NUMBER() OVER (PARTITION BY query_id
@@ -814,14 +754,7 @@ approx AS (
     FROM d, q WHERE neighbor_id <> query_id
   ) WHERE rank <= 5
 )
-SELECT gt.query_id,
-       CAST(SUM(CASE WHEN a.neighbor_id IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT) AS n_hits,
-       CAST(SUM(CASE WHEN a.neighbor_id IS NOT NULL THEN 1 ELSE 0 END) AS DOUBLE)
-         / CAST(5.0 AS DOUBLE) AS recall
-FROM gt LEFT JOIN approx a
-  ON gt.query_id = a.query_id AND gt.neighbor_id = a.neighbor_id
-GROUP BY gt.query_id
-"""
+{_RECALL_TAIL}"""
 
 
 @query("similarity_matryoshka_recall_eval", oracle=_MATRYOSHKA_ORACLE)
@@ -845,17 +778,7 @@ def similarity_matryoshka_recall_eval(spark: SparkSession, sf_dir: str) -> DataF
     approx = cosine_topk_bruteforce(
         sliced, sliced.filter(F.col("vec_id") < 10), "vec_id", "embedding", k=5
     ).select("query_id", "neighbor_id", F.lit(1).alias("hit"))
-    return (
-        truth.join(approx, ["query_id", "neighbor_id"], "left")
-        .groupBy("query_id")
-        .agg(
-            F.sum(F.coalesce(F.col("hit"), F.lit(0))).cast("bigint").alias("n_hits"),
-            (
-                F.sum(F.coalesce(F.col("hit"), F.lit(0))).cast("double")
-                / F.lit(5.0).cast("double")
-            ).alias("recall"),
-        )
-    )
+    return _recall_at_5(truth, approx)
 
 
 # kNN label classification eval — the supervised member of the eval

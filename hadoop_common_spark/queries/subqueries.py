@@ -18,116 +18,82 @@ from hadoop_common_spark.functions.exact import dsum_sql
 from hadoop_common_spark.queries import query
 
 
-@query(
-    "above_avg_balance",
-    oracle="""
+_ABOVE_AVG_BALANCE_SQL = """
     SELECT c_custkey, c_name, CAST(c_acctbal AS DOUBLE) AS acctbal
     FROM customer
     WHERE c_acctbal > (SELECT AVG(c_acctbal) FROM customer)
-    """,
-)
+    """
+
+
+@query("above_avg_balance", oracle=_ABOVE_AVG_BALANCE_SQL)
 def above_avg_balance(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Uncorrelated scalar subquery → broadcast of one value (the
     reference's compute-then-DistributedCache two-job idiom, fused).
     AVG over DECIMAL(12,2) is exact in both engines."""
-    return spark.sql(
-        """
-        SELECT c_custkey, c_name, CAST(c_acctbal AS DOUBLE) AS acctbal
-        FROM customer
-        WHERE c_acctbal > (SELECT AVG(c_acctbal) FROM customer)
-        """
-    )
+    return spark.sql(_ABOVE_AVG_BALANCE_SQL)
 
 
-@query(
-    "above_nation_avg_balance",
-    oracle="""
+_ABOVE_NATION_AVG_BALANCE_SQL = """
     SELECT c.c_custkey, c.c_nationkey
     FROM customer c
     WHERE c.c_acctbal > (
       SELECT AVG(c2.c_acctbal) FROM customer c2
       WHERE c2.c_nationkey = c.c_nationkey
     )
-    """,
-)
+    """
+
+
+@query("above_nation_avg_balance", oracle=_ABOVE_NATION_AVG_BALANCE_SQL)
 def above_nation_avg_balance(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Correlated scalar subquery — decorrelates to groupBy(nation) +
     equi-join (one shuffle), never per-row re-execution."""
-    return spark.sql(
-        """
-        SELECT c.c_custkey, c.c_nationkey
-        FROM customer c
-        WHERE c.c_acctbal > (
-          SELECT AVG(c2.c_acctbal) FROM customer c2
-          WHERE c2.c_nationkey = c.c_nationkey
-        )
-        """
-    )
+    return spark.sql(_ABOVE_NATION_AVG_BALANCE_SQL)
 
 
-@query(
-    "customers_without_urgent_orders",
-    oracle="""
+_NO_URGENT_ORDERS_SQL = """
     SELECT c_custkey, c_name FROM customer c
     WHERE NOT EXISTS (
       SELECT 1 FROM orders o
       WHERE o.o_custkey = c.c_custkey AND o.o_orderpriority = '1-URGENT'
     )
-    """,
-)
+    """
+
+
+@query("customers_without_urgent_orders", oracle=_NO_URGENT_ORDERS_SQL)
 def customers_without_urgent_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     """NOT EXISTS → left-anti join (the DataJoin absent-tag idiom);
     the priority predicate keeps the result non-empty on the synthetic
     data so the oracle check is non-vacuous."""
-    return spark.sql(
-        """
-        SELECT c_custkey, c_name FROM customer c
-        WHERE NOT EXISTS (
-          SELECT 1 FROM orders o
-          WHERE o.o_custkey = c.c_custkey AND o.o_orderpriority = '1-URGENT'
-        )
-        """
-    )
+    return spark.sql(_NO_URGENT_ORDERS_SQL)
 
 
-@query(
-    "parts_in_urgent_orders",
-    oracle="""
+_URGENT_PARTS_SQL = """
     SELECT p_partkey, p_name FROM part
     WHERE p_partkey IN (
       SELECT l_partkey FROM lineitem
       JOIN orders ON l_orderkey = o_orderkey
       WHERE o_orderpriority = '1-URGENT'
     )
-    """,
-)
+    """
+
+
+@query("parts_in_urgent_orders", oracle=_URGENT_PARTS_SQL)
 def parts_in_urgent_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IN subquery → left-semi join over a join subtree."""
-    return spark.sql(
-        """
-        SELECT p_partkey, p_name FROM part
-        WHERE p_partkey IN (
-          SELECT l_partkey FROM lineitem
-          JOIN orders ON l_orderkey = o_orderkey
-          WHERE o_orderpriority = '1-URGENT'
-        )
-        """
-    )
+    return spark.sql(_URGENT_PARTS_SQL)
 
 
-@query(
-    "brands_with_many_parts",
-    oracle="""
+_BRANDS_WITH_MANY_PARTS_SQL = """
     SELECT p_brand, COUNT(*) AS n_parts
     FROM part GROUP BY p_brand HAVING COUNT(*) > 50
-    """,
-)
+    """
+
+
+@query("brands_with_many_parts", oracle=_BRANDS_WITH_MANY_PARTS_SQL)
 def brands_with_many_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """HAVING — filter over the aggregate (free in Spark; the reference
     needs a second filtering job after the reduce)."""
-    return spark.sql(
-        "SELECT p_brand, COUNT(*) AS n_parts FROM part GROUP BY p_brand HAVING COUNT(*) > 50"
-    )
+    return spark.sql(_BRANDS_WITH_MANY_PARTS_SQL)
 
 
 _IMPORTANT_PARTS_SQL = f"""

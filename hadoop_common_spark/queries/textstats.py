@@ -945,8 +945,7 @@ def text_hard_negatives(spark: SparkSession, sf_dir: str) -> DataFrame:
     against the band candidates touching the anchor — both sides reuse
     the existing scorer/banding plans, so the whole mine is one lazy
     DAG with TakeOrderedAndProject at the top."""
-    from hadoop_common_spark.operators.dedup import lsh_band_keys, minhash_signature
-    from hadoop_common_spark.queries.dedup import BANDS, NUM_HASHES, ROWS
+    from hadoop_common_spark.queries.dedup import _band_candidates
     from pyspark.sql import Window
 
     scored = _bm25_scored(spark)
@@ -957,18 +956,7 @@ def text_hard_negatives(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(F.col("doc_id").alias("anchor_id"))
     )
 
-    docs = spark.table("documents")
-    bk = lsh_band_keys(
-        minhash_signature(docs, "doc_id", "text"), "doc_id", BANDS, ROWS
-    )
-    a = bk.select(F.col("doc_id").alias("id_a"), "band", "band_key")
-    b = bk.select(F.col("doc_id").alias("id_b"), "band", "band_key")
-    cand = (
-        a.join(b, ["band", "band_key"])
-        .filter(F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b")
-        .distinct()
-    )
+    cand = _band_candidates(spark.table("documents"))
     nd = (
         cand.join(
             F.broadcast(anchor),

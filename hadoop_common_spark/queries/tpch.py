@@ -492,9 +492,7 @@ def quantity_band_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query(
-    "small_quantity_revenue",
-    oracle=f"""
+_SMALL_QUANTITY_REVENUE_SQL = f"""
     SELECT {dsum_sql('l_extendedprice')} / 7.0 AS avg_yearly
     FROM lineitem l JOIN part p ON p_partkey = l_partkey
     WHERE p_brand = 'Brand#1'
@@ -502,8 +500,10 @@ def quantity_band_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
         SELECT 0.2 * ({dsum_sql('l2.l_quantity')} / COUNT(*))
         FROM lineitem l2 WHERE l2.l_partkey = p.p_partkey
       )
-    """,
-)
+    """
+
+
+@query("small_quantity_revenue", oracle=_SMALL_QUANTITY_REVENUE_SQL)
 def small_quantity_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Correlated-average subquery against the fact table (TPC-H Q17
     shape): lineitems below 20% of their part's mean quantity. Catalyst
@@ -511,17 +511,7 @@ def small_quantity_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     one subquery per row (the reference would need a self-join MapReduce
     pass, lib/join). Exact decimal mean so the threshold comparison is
     engine-independent."""
-    return spark.sql(
-        f"""
-        SELECT {dsum_sql('l_extendedprice')} / 7.0 AS avg_yearly
-        FROM lineitem l JOIN part p ON p_partkey = l_partkey
-        WHERE p_brand = 'Brand#1'
-          AND l_quantity < (
-            SELECT 0.2 * ({dsum_sql('l2.l_quantity')} / COUNT(*))
-            FROM lineitem l2 WHERE l2.l_partkey = p.p_partkey
-          )
-        """
-    )
+    return spark.sql(_SMALL_QUANTITY_REVENUE_SQL)
 
 
 @query(
@@ -560,9 +550,7 @@ def large_volume_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query(
-    "inactive_rich_customers",
-    oracle=f"""
+_INACTIVE_RICH_CUSTOMERS_SQL = f"""
     SELECT c_mktsegment AS segment, COUNT(*) AS numcust,
            {dsum_sql('c_acctbal')} AS totacctbal
     FROM customer c
@@ -576,30 +564,16 @@ def large_volume_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
           AND o.o_orderdate >= TIMESTAMP '2000-06-01'
       )
     GROUP BY c_mktsegment
-    """,
-)
+    """
+
+
+@query("inactive_rich_customers", oracle=_INACTIVE_RICH_CUSTOMERS_SQL)
 def inactive_rich_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Anti-join + scalar subquery (TPC-H Q22 shape): above-average-
     balance customers with no recent orders, counted per market segment.
     The NOT EXISTS plans as a left-anti join on the date-pruned orders
     scan; the global average is one scalar subquery computed once."""
-    return spark.sql(
-        f"""
-        SELECT c_mktsegment AS segment, COUNT(*) AS numcust,
-               {dsum_sql('c_acctbal')} AS totacctbal
-        FROM customer c
-        WHERE c_acctbal > (
-            SELECT {dsum_sql('c_acctbal')} / COUNT(*)
-            FROM customer WHERE c_acctbal > 0.0
-          )
-          AND NOT EXISTS (
-            SELECT 1 FROM orders o
-            WHERE o.o_custkey = c.c_custkey
-              AND o.o_orderdate >= TIMESTAMP '2000-06-01'
-          )
-        GROUP BY c_mktsegment
-        """
-    )
+    return spark.sql(_INACTIVE_RICH_CUSTOMERS_SQL)
 
 
 @query(
@@ -629,9 +603,7 @@ def disjunctive_bracket_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     return j.filter(bracket).agg(dsum(REVENUE()).alias("revenue"))
 
 
-@query(
-    "supplier_diversity_by_part",
-    oracle="""
+_SUPPLIER_DIVERSITY_SQL = """
     SELECT p_brand, p_type, p_size, COUNT(DISTINCT l_suppkey) AS supplier_cnt
     FROM lineitem JOIN part ON p_partkey = l_partkey
     WHERE p_brand <> 'Brand#1'
@@ -639,29 +611,19 @@ def disjunctive_bracket_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
       AND p_size IN (1, 5, 9, 13)
       AND l_suppkey NOT IN (SELECT s_suppkey FROM supplier WHERE s_acctbal < 0)
     GROUP BY p_brand, p_type, p_size
-    """,
-)
+    """
+
+
+@query("supplier_diversity_by_part", oracle=_SUPPLIER_DIVERSITY_SQL)
 def supplier_diversity_by_part(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Distinct-count over an excluded-supplier NOT IN (TPC-H Q16 shape):
     the NOT IN plans as a null-aware anti join against the (tiny,
     broadcast) negative supplier list; COUNT(DISTINCT) expands to a
     two-phase aggregate — both safe at any fact size."""
-    return spark.sql(
-        """
-        SELECT p_brand, p_type, p_size, COUNT(DISTINCT l_suppkey) AS supplier_cnt
-        FROM lineitem JOIN part ON p_partkey = l_partkey
-        WHERE p_brand <> 'Brand#1'
-          AND p_type NOT LIKE 'PROMO%'
-          AND p_size IN (1, 5, 9, 13)
-          AND l_suppkey NOT IN (SELECT s_suppkey FROM supplier WHERE s_acctbal < 0)
-        GROUP BY p_brand, p_type, p_size
-        """
-    )
+    return spark.sql(_SUPPLIER_DIVERSITY_SQL)
 
 
-@query(
-    "bulk_suppliers_of_brand",
-    oracle="""
+_BULK_SUPPLIERS_SQL = """
     SELECT s_suppkey, s_name, s_acctbal
     FROM supplier
     WHERE s_suppkey IN (
@@ -671,26 +633,16 @@ def supplier_diversity_by_part(spark: SparkSession, sf_dir: str) -> DataFrame:
       GROUP BY l_suppkey
       HAVING SUM(CAST(l_quantity AS DECIMAL(30,6))) > 100
     )
-    """,
-)
+    """
+
+
+@query("bulk_suppliers_of_brand", oracle=_BULK_SUPPLIERS_SQL)
 def bulk_suppliers_of_brand(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IN over an aggregated-with-HAVING subquery (TPC-H Q20 shape):
     the qualifying-supplier set reduces on the fact first (brand filter
     pushed to the part scan, partial-agg before the HAVING), then the IN
     plans as a semi join — supplier rows never multiply."""
-    return spark.sql(
-        """
-        SELECT s_suppkey, s_name, s_acctbal
-        FROM supplier
-        WHERE s_suppkey IN (
-          SELECT l_suppkey
-          FROM lineitem JOIN part ON p_partkey = l_partkey
-          WHERE p_brand = 'Brand#2'
-          GROUP BY l_suppkey
-          HAVING SUM(CAST(l_quantity AS DECIMAL(30,6))) > 100
-        )
-        """
-    )
+    return spark.sql(_BULK_SUPPLIERS_SQL)
 
 
 @query(

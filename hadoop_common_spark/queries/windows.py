@@ -73,13 +73,9 @@ def window_sliding_10m_5m(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query(
-    "window_sessionize",
-    oracle=f"""
-    SELECT user_id, session_id,
-           COUNT(*) AS n_events,
-           MAX(e) - MIN(e) AS duration_s
-    FROM (
+# Gap sessions (30 min) of each user's events, grouped per session: the
+# FROM/GROUP BY both sessionization oracles aggregate.
+_SESSIONS_SQL = f"""    FROM (
       SELECT user_id, e,
              CAST(SUM(new_sess) OVER (PARTITION BY user_id ORDER BY e, event_id
                                  ROWS UNBOUNDED PRECEDING) AS BIGINT) AS session_id
@@ -92,29 +88,43 @@ def window_sliding_10m_5m(spark: SparkSession, sf_dir: str) -> DataFrame:
       )
     )
     GROUP BY user_id, session_id
-    """,
+    """
+
+
+def _sessions(spark: SparkSession) -> DataFrame:
+    """Spark side of _SESSIONS_SQL: events as (user_id, event_id, e)
+    with `session_id`, the running count of 30-minute gaps per user."""
+    df = spark.table("events").select(
+        "user_id", "event_id", F.expr(EPOCH).alias("e")
+    )
+    w = Window.partitionBy("user_id").orderBy("e", "event_id")
+    flagged = df.withColumn("_prev", F.lag("e").over(w)).withColumn(
+        "new_sess",
+        F.when(
+            F.col("_prev").isNull() | (F.col("e") - F.col("_prev") > 1800),
+            F.lit(1),
+        ).otherwise(F.lit(0)),
+    )
+    return flagged.withColumn(
+        "session_id",
+        F.sum("new_sess").over(w.rowsBetween(Window.unboundedPreceding, 0)),
+    )
+
+
+@query(
+    "window_sessionize",
+    oracle=f"""
+    SELECT user_id, session_id,
+           COUNT(*) AS n_events,
+           MAX(e) - MIN(e) AS duration_s
+{_SESSIONS_SQL}""",
 )
 def window_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Gap-based sessionization (30 min gap): lag → new-session flag →
     running sum = session id → per-session stats. The batch equivalent of
     streaming ``session_window(ts, '30 minutes')``; one shuffle on
     user_id, everything else window functions."""
-    df = spark.table("events").select(
-        "user_id", "event_id", F.expr(EPOCH).alias("e")
-    )
-    w = Window.partitionBy("user_id").orderBy("e", "event_id")
-    lagged = df.withColumn("_prev", F.lag("e").over(w))
-    flagged = lagged.withColumn(
-        "new_sess",
-        F.when(
-            F.col("_prev").isNull() | (F.col("e") - F.col("_prev") > 1800), F.lit(1)
-        ).otherwise(F.lit(0)),
-    )
-    sess = flagged.withColumn(
-        "session_id",
-        F.sum("new_sess").over(w.rowsBetween(Window.unboundedPreceding, 0)),
-    )
-    return sess.groupBy("user_id", "session_id").agg(
+    return _sessions(spark).groupBy("user_id", "session_id").agg(
         F.count(F.lit(1)).alias("n_events"),
         (F.max("e") - F.min("e")).alias("duration_s"),
     )
@@ -127,20 +137,7 @@ def window_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
            MIN(e) AS session_start,
            MAX(e) AS session_end,
            COUNT(*) AS n_events
-    FROM (
-      SELECT user_id, e,
-             CAST(SUM(new_sess) OVER (PARTITION BY user_id ORDER BY e, event_id
-                                 ROWS UNBOUNDED PRECEDING) AS BIGINT) AS session_id
-      FROM (
-        SELECT user_id, event_id, e,
-               CASE WHEN e - lag(e) OVER (PARTITION BY user_id ORDER BY e, event_id) > 1800
-                    OR lag(e) OVER (PARTITION BY user_id ORDER BY e, event_id) IS NULL
-                    THEN 1 ELSE 0 END AS new_sess
-        FROM (SELECT user_id, event_id, {EPOCH_SQL} AS e FROM events)
-      )
-    )
-    GROUP BY user_id, session_id
-    """,
+{_SESSIONS_SQL}""",
 )
 def stream_session_expiry_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Batch twin of the transformWithState timer-driven session-expiry
@@ -151,22 +148,7 @@ def stream_session_expiry_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
     tests/test_streaming_pipe_dag.py holds the two faces together; this
     face carries the DuckDB oracle. One shuffle on user_id; per-user
     window sort is user-bounded."""
-    df = spark.table("events").select(
-        "user_id", "event_id", F.expr(EPOCH).alias("e")
-    )
-    w = Window.partitionBy("user_id").orderBy("e", "event_id")
-    flagged = df.withColumn("_prev", F.lag("e").over(w)).withColumn(
-        "new_sess",
-        F.when(
-            F.col("_prev").isNull() | (F.col("e") - F.col("_prev") > 1800),
-            F.lit(1),
-        ).otherwise(F.lit(0)),
-    )
-    sess = flagged.withColumn(
-        "session_id",
-        F.sum("new_sess").over(w.rowsBetween(Window.unboundedPreceding, 0)),
-    )
-    return sess.groupBy("user_id", "session_id").agg(
+    return _sessions(spark).groupBy("user_id", "session_id").agg(
         F.min("e").alias("session_start"),
         F.max("e").alias("session_end"),
         F.count(F.lit(1)).alias("n_events"),
@@ -390,28 +372,9 @@ def events_multires_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     (count/min/max), so a production pipeline can persist the minute tier
     and fold increments upward — the oracle states that hierarchical
     form; explode-then-group computes the identical result."""
-    cell = F.explode(
-        F.array(
-            *[
-                F.struct(
-                    F.lit(tag).alias("resolution"),
-                    F.date_trunc(unit, F.col("ts")).alias("bucket"),
-                )
-                for tag, unit in (("1m", "minute"), ("1h", "hour"), ("1d", "day"))
-            ]
-        )
-    )
-    return (
-        spark.table("events")
-        .select(cell.alias("rb"), "value")
-        .select("rb.resolution", "rb.bucket", "value")
-        .groupBy("resolution", "bucket")
-        .agg(
-            F.count(F.lit(1)).alias("n_events"),
-            F.min("value").alias("min_value"),
-            F.max("value").alias("max_value"),
-        )
-    )
+    from hadoop_common_spark.streaming.jobs import multires_partial
+
+    return multires_partial(spark.table("events"))
 
 
 _ROLLING_ORACLE = f"""
@@ -1190,6 +1153,22 @@ _CDC_OPS = """
          value
   FROM events
 """
+
+
+def _cdc_ops(spark: SparkSession) -> DataFrame:
+    """Spark side of _CDC_OPS: the events as a keyed op log."""
+    return spark.table("events").select(
+        "user_id",
+        F.expr(EPOCH).alias("seq_ts"),
+        "event_id",
+        F.when(F.col("event_type") == "signup", "I")
+        .when(F.col("event_type") == "error", "D")
+        .otherwise("U")
+        .alias("op"),
+        "value",
+    )
+
+
 _CDC_ORACLE = f"""
 WITH log AS ({_CDC_OPS}),
 snap AS (
@@ -1228,16 +1207,7 @@ def events_cdc_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     per merge. See operators/cdc.py for the contract."""
     from hadoop_common_spark.operators.cdc import cdc_merge, materialize_log
 
-    ops = spark.table("events").select(
-        "user_id",
-        F.expr(EPOCH).alias("seq_ts"),
-        "event_id",
-        F.when(F.col("event_type") == "signup", "I")
-        .when(F.col("event_type") == "error", "D")
-        .otherwise("U")
-        .alias("op"),
-        "value",
-    )
+    ops = _cdc_ops(spark)
     # literal UTC epoch, NOT unix_timestamp(lit) — that parses in the
     # SESSION timezone, so a non-UTC driver session would shift the
     # snapshot/batch split by the UTC offset relative to the oracle's
@@ -1302,23 +1272,12 @@ def events_cdc_scd2_history(spark: SparkSession, sf_dir: str) -> DataFrame:
     survives), so the window sort is the honest cost here; `value`
     passes through untouched (no float accumulation)."""
     w = Window.partitionBy("user_id").orderBy("seq_ts", "event_id")
-    ops = spark.table("events").select(
-        "user_id",
-        F.expr(EPOCH).alias("seq_ts"),
-        "event_id",
-        F.when(F.col("event_type") == "signup", "I")
-        .when(F.col("event_type") == "error", "D")
-        .otherwise("U")
-        .alias("op"),
-        "value",
-    )
-    hist = ops.withColumn("next_ts", F.lead("seq_ts").over(w)).filter(
+    hist = _cdc_ops(spark).withColumn("next_ts", F.lead("seq_ts").over(w)).filter(
         F.col("op") != "D"
     )
-    w2 = Window.partitionBy("user_id").orderBy("seq_ts", "event_id")
     return hist.select(
         "user_id",
-        F.row_number().over(w2).cast("int").alias("version"),
+        F.row_number().over(w).cast("int").alias("version"),
         F.col("seq_ts").alias("valid_from"),
         F.col("next_ts").alias("valid_to"),
         "value",

@@ -49,6 +49,17 @@ def test_priority_lists_consistent():
     assert len(PRIORITY_WINDOW) <= 50
 
 
+def test_missing_query_module_fails_load_all(monkeypatch):
+    """A deleted or misnamed query module must fail the registry load,
+    not silently drop its queries from the driver surface."""
+    from hadoop_common_spark import queries
+
+    bogus = "hadoop_common_spark.queries.no_such_module"
+    monkeypatch.setattr(queries, "_QUERY_MODULES", [*queries._QUERY_MODULES, bogus])
+    with pytest.raises(ModuleNotFoundError, match="no_such_module"):
+        queries.load_all()
+
+
 def test_register_views_memoized_and_force(spark, tmp_path):
     """register_views is memoized per (session, sf_dir) — the per-query
     wrappers call it on EVERY query and the 10 footer reads were ~0.6s

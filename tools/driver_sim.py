@@ -15,32 +15,10 @@ executor-side package imports). Run: python tools/driver_sim.py [names...]
 
 from __future__ import annotations
 
-import math
 import os
 import sys
 
 REPO_DIR = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-
-
-def _norm(v):
-    if v is None:
-        return "\0NULL"
-    if isinstance(v, float):
-        if math.isnan(v):
-            return "NaN"
-        return f"{v:.9g}"
-    if hasattr(v, "isoformat"):
-        return v.isoformat()
-    if isinstance(v, list):
-        return tuple(_norm(x) for x in v)
-    if isinstance(v, bytes):
-        return v.hex()
-    return v
-
-
-def _rowset(cols, rows):
-    idx = sorted(range(len(cols)), key=lambda i: cols[i])
-    return sorted(tuple(_norm(r[i]) for i in idx) for r in rows)
 
 SPOT_DEFAULT = [
     "flagship_revenue_by_nation",
@@ -66,6 +44,8 @@ def main() -> None:
     )
     sys.path.insert(0, REPO_DIR)
     import __spark_entry__ as e
+    from hadoop_common_spark.tables import TABLE_NAMES
+    from tools.verify_local import _rowset
 
     df = e.entry(spark)
     rows = df.collect()
@@ -80,9 +60,7 @@ def main() -> None:
 
     con = duckdb.connect()
     sf_dir = "/root/testdata/sf0.01"
-    for t in (
-        "region nation customer supplier part orders lineitem events documents embeddings"
-    ).split():
+    for t in TABLE_NAMES:
         con.execute(
             f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{sf_dir}/{t}.parquet')"
         )

@@ -23,7 +23,6 @@ class is live.
 
 from __future__ import annotations
 
-import importlib.util
 import os
 import subprocess
 import sys
@@ -31,18 +30,10 @@ import sys
 REPO_DIR = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO_DIR)
 
-
-def _bench():
-    spec = importlib.util.spec_from_file_location(
-        "bench_for_sweep", os.path.join(REPO_DIR, "bench.py")
-    )
-    mod = importlib.util.module_from_spec(spec)
-    spec.loader.exec_module(mod)
-    return mod
+import bench  # noqa: E402
 
 
 def main() -> None:
-    bench = _bench()
     tier = os.path.join("/tmp", f"hcs_bench_tpch{bench.TPCH_SCALE_REPLICAS}x")
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     rebuild = "--rebuild" in sys.argv[1:]

@@ -15,12 +15,15 @@ semantic debugging.
 
 Every result line carries ``plan=<fingerprint>``: bench.plan_fingerprint
 of the query's physical plan, taken after the build and before the
-collect (``-`` when the build itself failed). Diffing the plan columns of
-two sweep logs shows which queries a change re-planned.
+collect (``-`` when the build itself failed), and ``oracle=<sha256[:16]>``
+of the query's oracle SQL text (``-`` for a rows-only query). Diffing the
+plan and oracle columns of two sweep logs shows which queries a change
+re-planned or re-specified.
 """
 
 from __future__ import annotations
 
+import hashlib
 import math
 import os
 import sys
@@ -158,6 +161,7 @@ def main():
             continue
         t0 = time.time()
         plan = "-"
+        oracle = hashlib.sha256(qd.oracle.encode()).hexdigest()[:16] if qd.oracle is not None else "-"
         try:
             sdf = qd.fn(spark, sf_dir)
             scols = sdf.columns
@@ -166,11 +170,11 @@ def main():
         except Exception as e:
             n_fail += 1
             failures.append(name)
-            print(f"FAIL  {name}: plan={plan} spark error: {type(e).__name__}: {e}")
+            print(f"FAIL  {name}: plan={plan} oracle={oracle} spark error: {type(e).__name__}: {e}")
             continue
         if qd.oracle is None:
             n_rowsonly += 1
-            print(f"rows  {name}: plan={plan} {len(srows)} rows (no oracle) [{time.time()-t0:.1f}s]")
+            print(f"rows  {name}: plan={plan} oracle={oracle} {len(srows)} rows (no oracle) [{time.time()-t0:.1f}s]")
             continue
         try:
             con = fresh_con()
@@ -186,24 +190,24 @@ def main():
         except Exception as e:
             n_fail += 1
             failures.append(name)
-            print(f"FAIL  {name}: plan={plan} duckdb error: {type(e).__name__}: {e}")
+            print(f"FAIL  {name}: plan={plan} oracle={oracle} duckdb error: {type(e).__name__}: {e}")
             continue
         ok = True
         if sorted(scols) != sorted(dcols):
             ok = False
-            print(f"FAIL  {name}: plan={plan} columns spark={sorted(scols)} duck={sorted(dcols)}")
+            print(f"FAIL  {name}: plan={plan} oracle={oracle} columns spark={sorted(scols)} duck={sorted(dcols)}")
         elif len(srows) != len(drows):
             ok = False
-            print(f"FAIL  {name}: plan={plan} rowcount spark={len(srows)} duck={len(drows)}")
+            print(f"FAIL  {name}: plan={plan} oracle={oracle} rowcount spark={len(srows)} duck={len(drows)}")
         else:
             s, d = _rowset(scols, srows, norm), _rowset(dcols, drows, norm)
             if s != d:
                 ok = False
                 diff = [(a, b) for a, b in zip(s, d) if a != b][:3]
-                print(f"FAIL  {name}: plan={plan} value mismatch; first diffs: {diff}")
+                print(f"FAIL  {name}: plan={plan} oracle={oracle} value mismatch; first diffs: {diff}")
         if ok:
             n_pass += 1
-            print(f"ok    {name}: plan={plan} {len(srows)} rows [{time.time()-t0:.1f}s]")
+            print(f"ok    {name}: plan={plan} oracle={oracle} {len(srows)} rows [{time.time()-t0:.1f}s]")
         else:
             n_fail += 1
             failures.append(name)
