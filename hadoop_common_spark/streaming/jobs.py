@@ -18,16 +18,16 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from hadoop_common_spark.functions.exact import dsum
+from hadoop_common_spark.tables import footer_schema, normalize_ts
 
 
 def read_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """File-source stream over the events parquet (one-file-per-trigger
-    emulation of an arriving stream). events.ts is normalized to an
-    instant timestamp exactly like the batch loader (tables.py): a
-    nanos-long physical form floor-divs to micros; a TIMESTAMP_NTZ
-    physical form casts to instant (session tz is UTC)."""
+    emulation of an arriving stream). The schema comes from the events
+    file's footer and events.ts is normalized to an instant timestamp,
+    both exactly as in the batch loader (``tables._read_table``)."""
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    batch_schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
+    batch_schema = footer_schema(spark, f"{sf_dir}/events.parquet")
     # Scope the stream to events.parquet only — streaming the bare directory
     # would sweep in every other table's file under the events schema.
     stream = (
@@ -35,12 +35,7 @@ def read_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         .option("pathGlobFilter", "events.parquet")
         .parquet(sf_dir)
     )
-    kind = batch_schema["ts"].dataType.simpleString()
-    if kind == "bigint":
-        return stream.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
-    if kind == "timestamp_ntz":
-        return stream.withColumn("ts", F.col("ts").cast("timestamp"))
-    return stream
+    return normalize_ts(stream, batch_schema)
 
 
 def tumbling_hourly_stream(events: DataFrame, watermark: str = "2 hours") -> DataFrame:

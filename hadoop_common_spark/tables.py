@@ -4,8 +4,10 @@ from __future__ import annotations
 
 import os
 
+from py4j.java_gateway import JavaClass
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType, _parse_datatype_json_string
 
 TABLE_NAMES = [
     "region",
@@ -23,27 +25,91 @@ TABLE_NAMES = [
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
 
-def _read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
-    # Normalize events.ts to TimestampType (instant, session tz = UTC)
-    # whatever the parquet physical form is across driver testdata
-    # generations:
-    #  - TIMESTAMP(NANOS) reads as a nanos long under
-    #    spark.sql.legacy.parquet.nanosAsLong -> floor-div to micros
-    #    (matching DuckDB's ns->us coercion);
-    #  - TIMESTAMP(MICROS, isAdjustedToUTC=false) infers as
-    #    TIMESTAMP_NTZ -> cast to instant (UTC session tz makes this the
-    #    same wall-clock DuckDB sees). Downstream epoch math
-    #    (CAST(ts AS LONG)) is ANSI-legal on TimestampType but NOT on
-    #    NTZ, so the SQL surface must see one type everywhere.
-    for field in df.schema.fields:
-        if field.name == "ts":
-            kind = field.dataType.simpleString()
-            if kind == "bigint":
-                df = df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
-            elif kind == "timestamp_ntz":
-                df = df.withColumn("ts", F.col("ts").cast("timestamp"))
+_SPARK_PARQUET = "org.apache.spark.sql.execution.datasources.parquet."
+_PARQUET_CONVERTER = "org.apache.parquet.format.converter.ParquetMetadataConverter"
+
+
+def footer_schema(spark: SparkSession, path: str) -> StructType:
+    """The schema ``spark.read.parquet(path)`` infers (mergeSchema off),
+    resolved on the driver from one parquet footer: no Spark job.
+
+    Inference runs a job to read that footer. Reading it here instead is
+    the reference's client-side input planning (``JobSubmitter.
+    writeSplits``): nothing runs on a task just to learn the input's
+    shape. Spark's own converter does the conversion
+    (``ParquetFileFormat.readSchemaFromFooter`` with a
+    ``ParquetToSparkSchemaConverter`` over the session's SQLConf), so
+    nanosAsLong, TIMESTAMP_NTZ inference and the row-metadata key of
+    Spark-written files apply exactly as in inference. The footer is
+    the one inference reads: ``path`` itself when it is a file, else
+    its first data file in path order, skipping names that start with
+    ``_`` or ``.``. A directory with no data file, or with
+    subdirectories, raises ValueError."""
+    # classes by full name: ``spark._jvm.org.apache...`` would cost one
+    # py4j round trip per name segment
+    client = spark._jvm._gateway_client
+    state = spark._jsparkSession.sessionState()
+    conf = state.newHadoopConf()
+    hpath = JavaClass("org.apache.hadoop.fs.Path", client)(path)
+    fs = hpath.getFileSystem(conf)
+    status = fs.getFileStatus(hpath)
+    if status.isDirectory():
+        status = _first_data_file(fs, hpath, path)
+    meta = JavaClass(_SPARK_PARQUET + "ParquetFooterReader", client).readFooter(
+        JavaClass("org.apache.parquet.hadoop.util.HadoopInputFile", client).fromStatus(status, conf),
+        JavaClass(_PARQUET_CONVERTER, client).SKIP_ROW_GROUPS,
+    )
+    schema = JavaClass(_SPARK_PARQUET + "ParquetFileFormat", client).readSchemaFromFooter(
+        JavaClass("org.apache.parquet.hadoop.Footer", client)(status.getPath(), meta),
+        JavaClass(_SPARK_PARQUET + "ParquetToSparkSchemaConverter", client)(state.conf()),
+    )
+    # the relation Spark builds from an inferred schema is all-nullable
+    return _parse_datatype_json_string(schema.asNullable().json())
+
+
+def _first_data_file(fs, hpath, path: str):
+    """FileStatus of the directory's first data file by name, the file
+    Spark's inference reads; hidden ``_``/``.`` entries (``_SUCCESS``,
+    ``.crc`` checksums) are not data."""
+    files = {}
+    for entry in fs.listStatus(hpath):
+        name = entry.getPath().getName()
+        if name.startswith(("_", ".")):
+            continue
+        if entry.isDirectory():
+            raise ValueError(f"parquet table {path}: subdirectory {name!r} (only flat tables)")
+        files[name] = entry
+    if not files:
+        raise ValueError(f"parquet table {path}: no data file")
+    return files[min(files)]
+
+
+def normalize_ts(df: DataFrame, schema: StructType) -> DataFrame:
+    """Normalize events.ts to TimestampType (instant, session tz = UTC)
+    whatever the parquet physical form is across driver testdata
+    generations; ``schema`` is the frame's read schema:
+     - TIMESTAMP(NANOS) reads as a nanos long under
+       spark.sql.legacy.parquet.nanosAsLong -> floor-div to micros
+       (matching DuckDB's ns->us coercion);
+     - TIMESTAMP(MICROS, isAdjustedToUTC=false) infers as
+       TIMESTAMP_NTZ -> cast to instant (UTC session tz makes this the
+       same wall-clock DuckDB sees). Downstream epoch math
+       (CAST(ts AS LONG)) is ANSI-legal on TimestampType but NOT on
+       NTZ, so the SQL surface must see one type everywhere."""
+    if "ts" not in schema.names:
+        return df
+    kind = schema["ts"].dataType.simpleString()
+    if kind == "bigint":
+        return df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
+    if kind == "timestamp_ntz":
+        return df.withColumn("ts", F.col("ts").cast("timestamp"))
     return df
+
+
+def _read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
+    path = f"{sf_dir}/{name}.parquet"
+    schema = footer_schema(spark, path)
+    return normalize_ts(spark.read.schema(schema).parquet(path), schema)
 
 
 def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
@@ -62,9 +128,12 @@ def register_views(
 ) -> dict[str, DataFrame]:
     """Load tables and register them as temp views for the SQL surface.
 
-    The LOADS are memoized per (session, sf_dir): each costs ~10 parquet
-    footer reads + py4j round trips (measured 0.6-2.0s), and the query
-    wrappers call this on EVERY query — at small SFs that fixed overhead
+    The LOADS are memoized per (session, sf_dir). A load starts no Spark
+    job: each table's schema is one footer read on the driver
+    (``footer_schema``, 10-20 ms a table). A fresh JVM's first call
+    took 1.0-1.2 s (4 cores, sf0.01), most of it class loading on the
+    first table; the ten inference jobs it replaced took ~1 s more. The
+    query wrappers call this on EVERY query — at small SFs that overhead
     dominates sub-2s queries and its JVM-state variance was misread as
     per-query drift (r6's pipeline_clean_corpus watch item). The views
     are PINNED: each registration keeps the catalog's raw temp-view
