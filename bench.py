@@ -15,7 +15,6 @@ the SURVEY §2 query set.
 from __future__ import annotations
 
 import gc
-import glob
 import hashlib
 import json
 import os
@@ -270,7 +269,7 @@ SCALE_QUERIES = [
 # The r5/r6 100x spot checks (BENCH_NOTES) kept finding the real bounds
 # (containment OOM, the KMV exact-leg sort, the pair-output walls) that
 # neither sf0.1 nor the 10x tier can see — promoted to a standing tier
-# with round-over-round gating. Queries are the spot-check set: every
+# gated against the previous run like every tier. Queries are the spot-check set: every
 # entry is linear-or-sublinear by design (output-bound pair reporters are
 # exactly what this tier must NOT carry uncapped — their capped presets
 # carry the flag instead). N=2 keep-min per query (the first run pays
@@ -608,24 +607,6 @@ def terasort_equivalent(spark, n_rows: int):
     return recs.orderBy("key")
 
 
-def _numbered(prefix: str) -> list[tuple[int, str]]:
-    """(N, path) of every ``<prefix>{N}.json`` in the repo, ascending."""
-    pat = re.compile(re.escape(prefix) + r"(\d+)\.json$")
-    return sorted(
-        (int(m.group(1)), p)
-        for p in glob.glob(os.path.join(REPO_DIR, prefix + "*.json"))
-        if (m := pat.search(p))
-    )
-
-
-def _current_round() -> int:
-    """The round being built = newest driver-written BENCH_r{N}.json + 1
-    (the driver records that file AFTER a round closes, so during round 5
-    the newest is BENCH_r04)."""
-    rounds = _numbered("BENCH_r")
-    return rounds[-1][0] + 1 if rounds else 1
-
-
 def _read_json(path: str) -> dict:
     try:
         with open(path) as f:
@@ -634,23 +615,17 @@ def _read_json(path: str) -> dict:
         return {}
 
 
-def _prev_round_baseline(sf: float, cpus: int | None = None) -> tuple[str | None, dict]:
-    """The previous ROUND's detail record (not the previous run of this
-    round — VERDICT r4 "What's wrong" #1): the newest archived
-    BENCH_DETAIL_r{N}.json with N < current round and a per-query map at
-    the same sf. With ``cpus`` (a bounded run) it is the previous run at
-    that core count, BENCH_DETAIL_c{cpus}.json, or nothing: the round
-    archives ran on another core count. Returns (label, detail) or
-    (None, {})."""
-    cur = _current_round()
-    archives = reversed(_numbered("BENCH_DETAIL_r"))
-    if cpus is not None:
-        archives = [(0, os.path.join(REPO_DIR, f"BENCH_DETAIL_c{cpus}.json"))]
-    for n, p in archives:
-        d = _read_json(p)
-        if n < cur and d.get("queries") and d.get("sf") in (None, sf):
-            return os.path.basename(p), d
-    return None, {}
+def _baseline(sf: float, cpus: int) -> tuple[str | None, dict, dict[str, dict]]:
+    """The previous run at this core count and sf: the label and record
+    of BENCH_DETAIL_c{cpus}.json (or None, {}) and the runs of
+    PROFILE_c{cpus}.json (or {}). Runs on another core count are not
+    comparable, so no other file is read."""
+    label = f"BENCH_DETAIL_c{cpus}.json"
+    detail = _read_json(os.path.join(REPO_DIR, label))
+    if not (detail.get("queries") and detail.get("sf") in (None, sf)):
+        label, detail = None, {}
+    profile = _read_json(os.path.join(REPO_DIR, f"PROFILE_c{cpus}.json"))
+    return label, detail, profile.get("runs", {}) if profile.get("sf") == sf else {}
 
 
 # ---- plan fingerprint: the gate's host-independent number. Wall time on
@@ -1028,7 +1003,7 @@ def stdout_line(detail: dict, cpus: int, bounded: bool) -> str:
         "vs_round": vs["prev_round"],
         "host_slowdown": vs["host_slowdown"],
         # a bounded run is a core-count scaling measurement: its flags
-        # stay in BENCH_DETAIL_c{cpus}.json, off the round's line
+        # stay in the detail record, off the line
         "regressions": {} if bounded else {
             k: {"norm": v["norm"], "fired": v["fired"], "base": v["base"]}
             for k, v in list(flags.items())[:8]
@@ -1067,10 +1042,9 @@ def main() -> None:
     # REDUCED core count to measure per-query scaling, and the full run
     # blew its budget at 8 cores (BENCH_r12_c8.json: rc 124). At <=8
     # cores the run drops what a scaling measurement doesn't need: the
-    # 100x tier, the skew fixture and the keep-min repeats. It is flagged
-    # against the previous BENCH_DETAIL_c{cpus}.json, which it then
-    # overwrites; the stdout line carries no flags and no round archive
-    # is written.
+    # 100x tier, the skew fixture and the keep-min repeats, and its
+    # stdout line carries no flags. Every run, bounded or not, is
+    # flagged against the previous run at its core count (_baseline).
     bounded = cpus <= 8
 
     # the event log is where every run's work counters come from
@@ -1136,28 +1110,20 @@ def main() -> None:
     profile = read_profile(log_dir, runs)
     shutil.rmtree(log_dir, ignore_errors=True)
     fingerprints = {k.rpartition("#")[0]: r["fingerprint"] for k, r in runs.items() if r["fingerprint"]}
-    prev_label, prev = _prev_round_baseline(sf, cpus if bounded else None)
-    # the previous profile comes from this core count by its name
-    profile_path = os.path.join(REPO_DIR, f"PROFILE_c{cpus}.json")
-    prev_profile = _read_json(profile_path)
-    prev_runs = prev_profile.get("runs", {}) if prev_profile.get("sf") == sf else {}
+    prev_label, prev, prev_runs = _baseline(sf, cpus)
     detail = build_detail(
         sf, timings, skew_timings, dfsio, fingerprints, prev_label, prev, profile, prev_runs
     )
-    # Full per-query timings go to a repo file. BENCH_DETAIL.json is the
-    # working copy; BENCH_DETAIL_r{N}.json is the per-round archive the
-    # NEXT round diffs against (VERDICT r4 #1 — the working file alone is
-    # overwritten by every run, so intra-round runs reset the baseline).
-    # A bounded run writes neither: its numbers are a different machine
-    # shape, not a different code state.
-    names = [f"BENCH_DETAIL_c{cpus}.json"] if bounded else [
-        "BENCH_DETAIL.json", f"BENCH_DETAIL_r{_current_round():02d}.json"
-    ]
-    for fname in names:
+    # the next run at this core count compares with these two files;
+    # BENCH_DETAIL.json is the copy the stdout line names
+    records = {
+        f"BENCH_DETAIL_c{cpus}.json": detail,
+        "BENCH_DETAIL.json": detail,
+        f"PROFILE_c{cpus}.json": {"cpus": cpus, "sf": sf, "runs": profile},
+    }
+    for fname, record in records.items():
         with open(os.path.join(REPO_DIR, fname), "w") as f:
-            json.dump(detail, f, indent=1, sort_keys=True)
-    with open(profile_path, "w") as f:
-        json.dump({"cpus": cpus, "sf": sf, "runs": profile}, f, indent=1, sort_keys=True)
+            json.dump(record, f, indent=1, sort_keys=True)
     print(stdout_line(detail, cpus, bounded))
 
 

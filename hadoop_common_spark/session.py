@@ -273,6 +273,17 @@ def _plan_driver_archive(driver_mem: str) -> tuple[str, str, str | None] | None:
     return f"{_CDS_LOG_OFF} -XX:ArchiveClassesAtExit={cand}", empty_conf, cand + ".json"
 
 
+def _driver_mem() -> str:
+    """The driver heap: ``SPARK_GRAFT_DRIVER_MEM``, else half the host's
+    physical memory in whole GiB (at least 1g, at most 16g). A heap near
+    the host's size gets the JVM killed by the kernel once a second JVM
+    shares the host; half leaves room for it and the Python workers."""
+    if env := os.environ.get("SPARK_GRAFT_DRIVER_MEM"):
+        return env
+    half_gib = os.sysconf("SC_PHYS_PAGES") * os.sysconf("SC_PAGE_SIZE") // 2 // (1 << 30)
+    return f"{min(max(half_gib, 1), 16)}g"
+
+
 def get_spark(app_name: str = "hadoop_common_spark", shuffle_partitions: int | None = None) -> SparkSession:
     """Build (or get) a SparkSession tuned for the current machine.
 
@@ -321,7 +332,7 @@ def get_spark(app_name: str = "hadoop_common_spark", shuffle_partitions: int | N
     from hadoop_common_spark.streaming.stateful import ensure_protobuf
 
     ensure_protobuf()
-    driver_mem = os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g")
+    driver_mem = _driver_mem()
     driver_opts = os.environ.get("SPARK_GRAFT_DRIVER_JAVA_OPTS", "-XX:ReservedCodeCacheSize=1g")
     plan = None
     builder = (

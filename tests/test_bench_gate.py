@@ -4,11 +4,11 @@ fingerprint is stable across builds and moves with the plan, and a
 timed run's profile read from the event log counts its work.
 
 The gate is measurement infrastructure, but it is DRIVER-FACING: its
-flags land verbatim in the archived BENCH_r{N}.json. It flags a row when
-its physical-plan fingerprint differs from the previous archive's
-("plan"), when its work counters moved against the previous
-PROFILE_c{cpus}.json ("work"), or both — numbers the host cannot move;
-the raw time ratio is reported only.
+flags land verbatim on the stdout line. It flags a row when its
+physical-plan fingerprint differs from the previous
+BENCH_DETAIL_c{cpus}.json's ("plan"), when its work counters moved
+against the previous PROFILE_c{cpus}.json ("work"), or both — numbers
+the host cannot move; the raw time ratio is reported only.
 Reference anchor: the SortValidator discipline
 (JCT/mapred/SortValidator.java:54) — validate the measurement, not
 just the output.
@@ -193,31 +193,34 @@ def test_work_flag_boundary_is_strictly_above_the_slack(bench):
 
 
 def test_regression_record_names_comparison_base(bench):
-    out = _gate(bench, {"q": 2.0}, {"q": 1.0}, {"q": "a"}, {"q": "b"}, base="BENCH_DETAIL_r13.json")
-    assert out["q"]["base"] == "BENCH_DETAIL_r13.json"
+    out = _gate(bench, {"q": 2.0}, {"q": 1.0}, {"q": "a"}, {"q": "b"}, base="BENCH_DETAIL_c32.json")
+    assert out["q"]["base"] == "BENCH_DETAIL_c32.json"
 
 
-def test_prev_round_baseline_is_newest_archive_before_current_round(bench, tmp_path, monkeypatch):
-    for n in (10, 11):
-        (tmp_path / f"BENCH_r{n:02d}.json").write_text("{}")
-    for n, sf in ((10, 0.1), (11, 0.1), (12, 0.1), (9, 0.01)):
-        (tmp_path / f"BENCH_DETAIL_r{n:02d}.json").write_text(
-            json.dumps({"sf": sf, "queries": {"q": float(n)}})
+@pytest.mark.parametrize("cpus", [4, 32])
+def test_baseline_is_the_previous_run_at_this_core_count(bench, tmp_path, monkeypatch, cpus):
+    """Bounded (4) and full (32) runs alike read BENCH_DETAIL_c{cpus}.json
+    and PROFILE_c{cpus}.json, never a round archive or another core
+    count's record, and nothing when that record is absent or at
+    another sf."""
+    for n in (12, 13):
+        (tmp_path / f"BENCH_r{n}.json").write_text("{}")
+        (tmp_path / f"BENCH_DETAIL_r{n}.json").write_text(
+            json.dumps({"sf": 0.1, "queries": {"q": float(n)}})
         )
-    monkeypatch.setattr(bench, "REPO_DIR", str(tmp_path))
-    assert bench._current_round() == 12
-    label, prev = bench._prev_round_baseline(0.1)
-    assert label == "BENCH_DETAIL_r11.json" and prev["queries"] == {"q": 11.0}
-    assert bench._prev_round_baseline(0.01)[0] == "BENCH_DETAIL_r09.json"
-    assert bench._prev_round_baseline(1.0) == (None, {})
-    # a bounded run compares with the last run at its own core count,
-    # never with a round archive from another
-    assert bench._prev_round_baseline(0.1, 4) == (None, {})
-    (tmp_path / "BENCH_DETAIL_c4.json").write_text(json.dumps({"sf": 0.1, "queries": {"q": 4.0}}))
     (tmp_path / "BENCH_DETAIL_c8.json").write_text(json.dumps({"sf": 0.1, "queries": {"q": 8.0}}))
-    label, prev = bench._prev_round_baseline(0.1, 4)
-    assert label == "BENCH_DETAIL_c4.json" and prev["queries"] == {"q": 4.0}
-    assert bench._prev_round_baseline(0.01, 4) == (None, {})
+    monkeypatch.setattr(bench, "REPO_DIR", str(tmp_path))
+    assert bench._baseline(0.1, cpus) == (None, {}, {})
+    (tmp_path / f"BENCH_DETAIL_c{cpus}.json").write_text(
+        json.dumps({"sf": 0.1, "queries": {"q": float(cpus)}})
+    )
+    (tmp_path / f"PROFILE_c{cpus}.json").write_text(
+        json.dumps({"cpus": cpus, "sf": 0.1, "runs": {"q#0": _work()}})
+    )
+    label, prev, prev_runs = bench._baseline(0.1, cpus)
+    assert label == f"BENCH_DETAIL_c{cpus}.json" and prev["queries"] == {"q": float(cpus)}
+    assert prev_runs == {"q#0": _work()}
+    assert bench._baseline(0.01, cpus) == (None, {}, {})
 
 
 # The stdout line's top-level keys and the BENCH_DETAIL keys before the
@@ -266,7 +269,7 @@ def _synthetic_run(bench, slow: float):
     prev_work = {k + "#0": _work() for k in fps}
     return bench.build_detail(
         0.1, timings, skew, {"write_mb_s": 120.0, "read_mb_s": 900.0},
-        fps, "BENCH_DETAIL_r13.json", prev, work, prev_work,
+        fps, "BENCH_DETAIL_c32.json", prev, work, prev_work,
     )
 
 

@@ -32,23 +32,6 @@ def test_flagship_plan_broadcasts_dims(spark, sf_dir):
     assert "BroadcastHashJoin" in plan
 
 
-def test_priority_lists_consistent():
-    """Every PRIORITY name must exist in the registry (a typo would
-    silently demote a query out of the checked window), no duplicates,
-    and the hand-curated window block stays at <= 50 entries."""
-    from hadoop_common_spark.queries import (
-        PRIORITY,
-        PRIORITY_WINDOW,
-        load_all,
-    )
-
-    reg = load_all()
-    missing = [n for n in PRIORITY if n not in reg]
-    assert not missing, f"PRIORITY names not in registry: {missing}"
-    assert len(set(PRIORITY)) == len(PRIORITY)
-    assert len(PRIORITY_WINDOW) <= 50
-
-
 def test_missing_query_module_fails_load_all(monkeypatch):
     """A deleted or misnamed query module must fail the registry load,
     not silently drop its queries from the driver surface."""

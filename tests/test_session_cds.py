@@ -4,7 +4,8 @@ package zip each session ships.
 Sessions run in subprocesses with ``XDG_CACHE_HOME`` pointed at a tmp
 directory, so no test reads or writes the real per-user archive cache.
 Runtime at 4 cores: ~75 s for the module. A subprocess session takes
-6-10 s; the two that dump an archive at exit take ~23 s each.
+6-10 s; the two that dump an archive at exit take ~23 s each. The
+driver-heap derivation test starts no JVM.
 """
 
 from __future__ import annotations
@@ -170,6 +171,23 @@ def test_truncated_candidate_is_deleted_not_promoted(dumped, caches):
     assert not os.path.exists(archive)
     # it missed, so it dumped a candidate of its own
     assert any(a.startswith("-XX:ArchiveClassesAtExit=") for a in result["args"])
+
+
+@pytest.mark.parametrize(
+    "host_gib,heap",
+    [(1.5, "1g"), (4, "2g"), (15.7, "7g"), (32, "16g"), (512, "16g")],
+)
+def test_default_driver_heap_is_half_the_host_capped_at_16g(monkeypatch, host_gib, heap):
+    """No JVM: the heap ``get_spark`` asks for when
+    SPARK_GRAFT_DRIVER_MEM is unset, from a faked host size; the
+    variable, when set, wins on every host."""
+    page = 4096
+    conf = {"SC_PAGE_SIZE": page, "SC_PHYS_PAGES": int(host_gib * (1 << 30)) // page}
+    monkeypatch.setattr(session.os, "sysconf", conf.__getitem__)
+    monkeypatch.delenv("SPARK_GRAFT_DRIVER_MEM", raising=False)
+    assert session._driver_mem() == heap
+    monkeypatch.setenv("SPARK_GRAFT_DRIVER_MEM", "3g")
+    assert session._driver_mem() == "3g"
 
 
 def test_changed_jar_maps_to_another_key_and_promotion_drops_stale_archives(
